@@ -88,11 +88,6 @@ def path_of(url: Column) -> Column:
     return F.coalesce(F.parse_url(url, F.lit("PATH")), F.lit(""))
 
 
-def url_hash(url: Column) -> Column:
-    """Canonical 64-bit key for seen-set membership / bloom probes."""
-    return F.xxhash64(url)
-
-
 def in_scope(url: Column, domain: str, root_path: str, make_root_filter: bool = True) -> Column:
     """F4 — same-host (+ root-path prefix when ``make_root_filter``)."""
     same_host = host_of(url) == F.lit(domain)

@@ -1,27 +1,25 @@
-"""The URL frontier: BFS wave loop as DataFrame jobs.
+"""The URL frontier: one round loop over DataFrame jobs.
 
 Re-creates the reference's single-process BFS (``src/crawler.py:126-272``)
-as one Catalyst job per depth wave over ALL sources simultaneously:
+as rounds of Catalyst jobs over ALL sources at once (job count is
+O(rounds), not O(sources × rounds)):
 
-    wave_d  --join pages-->  fetch  --mapInPandas-->  links
+    pending  --fetch set-->  fetch (join | http)  --mapInPandas-->  links
       --strip/filter F1-F5-->  candidates  --left_anti seen-->
-      --first-occurrence dedup-->  wave_{d+1}  --assign_seq-->  seen ∪=
+      --first-occurrence dedup-->  --assign_seq-->  delta  -->  seen ∪=,
+      next pending
 
-Design notes for the 10^10-URL case:
+The entry points differ only in the schedule that picks a round's fetch
+set: :func:`crawl_sources` takes the whole pending set (all of it shares
+one depth, so a round is a BFS wave); :func:`crawl_sources_budgeted`
+takes the per-host politeness slots that fit a round budget.
 
-* ALL sources ride one DataFrame per wave — job count is O(depth), not
-  O(sources × depth).
-* the seen-set anti-join is keyed (source_id, url): exact, and the only
-  correctness-bearing dedup. The bloom sidecar (operators/bloom.py) is a
-  pure prefilter in front of it.
-* per-source FIFO visit order is reconstructed with the two-phase ranking
-  in operators/ranking.py — no global-window single-partition sort.
-* per-wave ``localCheckpoint`` truncates the iterative lineage; with a
-  snapshot table (storage/snaptable.py) the checkpoint doubles as the
-  resumable Iceberg-style snapshot.
-* mega-host skew: candidate link extraction partitions by input file
-  splits; the explicit ``repartition`` before the UDF spreads a skewed
-  host by url hash (salting); AQE skew-join handles the rest.
+* the seen anti-join keyed (source_id, url) is exact and the frontier's
+  only dedup; per-source FIFO order comes from the two-phase ranking in
+  operators/ranking.py, never a global single-partition sort.
+* one ``localCheckpoint`` per round truncates the iterative lineage; a
+  state store (storage/crawl_state.py) also commits every round, so a
+  killed crawl resumes.
 
 Reference-semantics invariants (tests/test_frontier_equality.py):
 
@@ -34,7 +32,7 @@ Reference-semantics invariants (tests/test_frontier_equality.py):
   (crawler.py:214-226).
 * candidates are checked against seen at extraction time; in-wave
   duplicates resolve at pop — equivalent to anti-join against
-  (seen ∪ current wave) + first-occurrence dedup (proof in module tests).
+  (seen ∪ current wave) + first-occurrence dedup.
 * fetch failures keep the URL in seen but yield no links
   (crawler.py:191-196,238-243).
 """
@@ -52,6 +50,8 @@ from pyspark.sql import types as T
 from ..config import SourceConfig
 from ..functions import urls as U
 from ..functions.htmlmini import extract_hrefs, extract_mc_listing_hrefs
+from . import fetch as http_fetch
+from . import politeness
 from .ranking import assign_seq_lazy
 
 SEEN_SCHEMA = T.StructType(
@@ -266,19 +266,15 @@ BROADCAST_WAVE_THRESHOLD = 1_000_000
 # (tools/scaling_bench.py, >=100k URLs) crosses it; the toy bench does
 # not.
 COPARTITION_SEEN_THRESHOLD = 50_000
-# Frontier-growth estimate that routes a wave's seq ranking onto the
+# Frontier-growth estimate that routes a round's seq ranking onto the
 # two-phase range path (ranking.assign_seq_lazy) BEFORE the new-URL
-# count is known. The ranked set is new_urls AFTER seen-anti-join and
-# first-occurrence dedup — empirically ≤ ~1.3× the previous wave even
-# in the exponential phase (measured: 27k→51k→65k→70k on the heavy
-# 200k world), so prev × 2 is a safe routing bound; the raw
-# links-per-page fan-out (12-16×) is the wrong quantity and measured
-# −11 s/crawl at the 200k world by pushing every mid-size wave through
-# the two-phase checkpoint+counts jobs. Mis-routing is benign in both
-# directions: overestimate = two extra small jobs; underestimate = one
-# window task per SOURCE carries that source's wave (only a mega-wave
-# in a SINGLE source actually funnels, and the two-phase path re-engages
-# the next wave once prev × 2 crosses the threshold).
+# count is known. The ranked set is the new URLs after the anti-join and
+# dedup — empirically ≤ ~1.3× the fetch set even in the exponential
+# phase (measured 27k→51k→65k→70k on the heavy 200k world), so × 2 is a
+# safe bound; the raw links-per-page fan-out (12-16×) measured −11
+# s/crawl there by pushing every mid-size wave through the two-phase
+# jobs. Mis-routing costs two small jobs, or funnels one source's round
+# through one window task until the next round re-routes.
 EST_WAVE_BRANCHING = 2
 
 
@@ -292,15 +288,153 @@ def _fetch_join(wave_slim: DataFrame, pages_slim: DataFrame, wave_rows: int | No
     return left.join(pages_slim, wave_slim.url == pages_slim.p_url, "inner")
 
 
-def _filter_builder(kind: str):
-    """Delta-builder for the seen-filter sidecar ('bloom' | 'cuckoo')."""
-    if kind == "cuckoo":
-        from .cuckoo import build_delta as bd
-    elif kind == "bloom":
-        from .bloom import build_delta as bd
-    else:  # pragma: no cover - guarded by callers
-        raise ValueError(f"unknown seen-filter kind: {kind!r}")
-    return bd
+# a pending row carries its source's is_mc, so the fetch needs no dim join
+_FRONTIER_COLS = ("source_id", "url", "host", "depth", "seq", "is_mc")
+
+
+class _Budget:
+    """The schedule of :func:`crawl_sources_budgeted`: each round fetches
+    only the URLs whose per-host slot fits the budget; the rest stay
+    pending with their seq. Also owns what only a budget needs: the
+    cadence carry-over, the robots Disallow gate, the schedule log and
+    min-depth re-admission."""
+
+    def __init__(self, robots, budget_s, obey_disallow, readmit, schedule_log):
+        if not budget_s > 0:
+            raise ValueError(f"round_budget_s must be > 0, got {budget_s!r}")
+        self.robots = robots
+        # static dim: count once, so every schedule/robots join in the
+        # loop can gate its broadcast without re-counting
+        self.robots_rows = robots.count() if robots is not None else None
+        self.budget_s = budget_s
+        self.disallow = obey_disallow and robots is not None
+        self.readmit = readmit
+        self.log = schedule_log
+        # (host, t0) cadence carry-over: a host's last fetch near the
+        # round boundary pushes its first slot next round, so per-host
+        # spacing stays >= crawl_delay ACROSS rounds (render_utils.py:58)
+        self.offsets: DataFrame | None = None
+        # depth-improvement overlay for re-admission; in-memory only — a
+        # resume may re-trigger one redundant refetch, never a wrong set
+        self.improvements: DataFrame | None = None
+        self._cached: list[DataFrame] = []
+
+    def allowed(self, df: DataFrame) -> DataFrame:
+        """Drop robots-Disallowed URLs: they never fetch, never expand,
+        never enter seen. Off by default: the reference reads only
+        crawl_delay (crawler.py:144-150)."""
+        if not self.disallow:
+            return df
+        from .robots import filter_disallowed
+
+        if "host" in df.columns:
+            return filter_disallowed(df, self.robots, robots_rows=self.robots_rows)
+        return filter_disallowed(
+            df.withColumn("host", U.host_of(F.col("url"))), self.robots,
+            robots_rows=self.robots_rows,
+        ).drop("host")
+
+    def take(self, pending: DataFrame, n_pending: int, rnd: int):
+        """(fetch set, its size, deferred) for one round. Slot by seq =
+        priority; ``n_pending`` picks the slot ranking's strategy, so a
+        Zipf host never funnels a mega-frontier through one window task."""
+        sched = politeness.with_schedule(
+            pending, self.robots, robots_rows=self.robots_rows,
+            host_offsets=self.offsets, wave_rows=n_pending,
+        )
+        now, deferred = politeness.split_by_budget(sched, self.budget_s)
+        # one agg job materializes the schedule; the offsets, the log and
+        # the fetch read the cache. deferred stays lazy: the next pending
+        # set materializes it.
+        now = now.persist()
+        row = now.agg(F.count(F.lit(1)).alias("n"), F.min("depth").alias("d")).first()
+        n_now, self.shallowest = row["n"], row["d"]
+        self._cached.append(now)
+        if n_now:
+            self.offsets = politeness.next_round_offsets(
+                now, self.offsets, self.robots, self.budget_s, self.robots_rows
+            ).localCheckpoint(eager=True)
+            if self.log is not None:
+                self.log.extend(
+                    (rnd, r.host, r.url, r.sched_time)
+                    for r in now.select("host", "url", "sched_time").collect()
+                )
+        return now.drop("slot", "sched_time"), n_now, deferred
+
+    def wait(self) -> bool:
+        """An idle round: every pending host owes more than one whole
+        budget (crawl_delay > budget). Offsets decay by one budget, so the
+        loop always reaches a fetchable round. False if nothing is owed,
+        i.e. nothing can ever fit."""
+        if self.offsets is None:
+            return False
+        self.offsets = (
+            self.offsets.select(
+                "host",
+                F.greatest(F.lit(0.0), F.col("t0") - F.lit(self.budget_s)).alias("t0"),
+            )
+            .filter(F.col("t0") > 0)
+            .localCheckpoint(eager=True)
+        )
+        return True
+
+    def readmissions(self, queue_cand: DataFrame, seen: DataFrame, store, deepest: int):
+        """(rows, count): seen URLs rediscovered via a SHALLOWER parent
+        re-enter the frontier at the improved depth, keeping their seq,
+        so their subtree is re-expanded instead of cut at the depth
+        horizon. A key's best depth strictly decreases, so re-admissions
+        terminate; seen itself is never rewritten.
+
+        ``deepest`` is the greatest depth in seen. Every candidate is
+        deeper than the shallowest fetched row, so when that row is not
+        shallower than ``deepest`` - 1 no known depth can improve and the
+        step is skipped — always so when each round is one BFS depth."""
+        if self.shallowest + 1 >= deepest:
+            return None, 0
+        improvements = self.improvements
+        if store is not None:
+            # candidate-scoped lookup: semi_rows pulls only the seen rows
+            # this round's candidates touch, with no exchange on the
+            # delta sides (a plain join reshuffles all of seen)
+            qkeys = queue_cand.select("source_id", "url").dropDuplicates().persist()
+            seen = store.semi_rows(qkeys, list(SEEN_SCHEMA.names)).persist()
+            self._cached += [qkeys, seen]
+            if improvements is not None:
+                improvements = improvements.join(qkeys, ["source_id", "url"], "left_semi")
+        known = seen.filter(F.col("visited") & F.col("depth").isNotNull()).select(
+            "source_id", "url", "depth"
+        )
+        if improvements is not None:
+            known = known.unionByName(improvements)
+        known_min = known.groupBy("source_id", "url").agg(F.min("depth").alias("known_depth"))
+        redisc = (
+            queue_cand.join(seen.select("source_id", "url"), ["source_id", "url"], "left_semi")
+            .groupBy("source_id", "url")
+            .agg(F.min(F.struct("depth", "max_depth", "is_mc")).alias("k"))
+            .select("source_id", "url", "k.depth", "k.max_depth", "k.is_mc")
+        )
+        improved = redisc.join(known_min, ["source_id", "url"]).filter(
+            F.col("depth") < F.col("known_depth")
+        )
+        readmit = (
+            improved.filter(F.col("depth") < F.col("max_depth"))
+            .select("source_id", "url", "depth", "is_mc")
+            .join(seen.filter(F.col("visited")).select("source_id", "url", "host", "seq"),
+                  ["source_id", "url"])
+            .select(*_FRONTIER_COLS)
+            .persist()  # one count job materializes the cache
+        )
+        self._cached.append(readmit)
+        n = readmit.count()
+        if n:
+            imp = improved.select("source_id", "url", "depth").localCheckpoint(eager=True)
+            self.improvements = imp if self.improvements is None else self.improvements.unionByName(imp)
+        return readmit, n
+
+    def release(self) -> None:
+        for df in self._cached:
+            df.unpersist()
+        self._cached = []
 
 
 def crawl_sources(
@@ -308,14 +442,9 @@ def crawl_sources(
     sources: list[SourceConfig],
     pages: DataFrame,
     make_root_filter: bool = True,
-    candidate_partitions: int | None = None,
-    checkpoint: bool = True,
     state_store=None,
     resume: bool = False,
     max_waves: int | None = None,
-    use_bloom: bool = False,
-    use_filter: str | None = None,
-    bloom_buckets: int = 64,
     metrics_store=None,
     run_id: str = "run",
     salt_hosts_threshold: int | None = None,
@@ -326,454 +455,44 @@ def crawl_sources(
     copartition_seen: bool | str = "auto",
     seen_store_factory=None,
 ) -> CrawlResult:
-    """Run the full BFS to fixpoint for every source in one wave loop.
+    """Run the full BFS to fixpoint for every source in one round loop.
 
-    ``fetch='http'`` swaps the synthetic lookup join for the live
-    mapInPandas HTTP ladder (operators/fetch.py) driven by
-    ``transport_factory`` — the deployment path; ``fetch='join'`` (the
-    default) resolves against the ``pages`` table. Both produce identical
-    fetched sets for a transport serving the same world
+    No budget: every round fetches the whole pending set, and all pending
+    URLs share one depth, so a round is a BFS wave and the visit order is
+    the reference's.
+
+    ``fetch='http'`` swaps the synthetic lookup join for the live HTTP
+    ladder (operators/fetch.py) driven by ``transport_factory``; both give
+    identical fetched sets for a transport serving the same world
     (tests/test_fetch_http.py). ``fetch_kwargs`` passes through to
-    :func:`~course_scraper_spark.operators.fetch.fetch_http`
-    (e.g. ``{'sleep_fn': NO_SLEEP}`` for synthetic transports; the default backs off with real time.sleep).
+    :func:`~course_scraper_spark.operators.fetch.fetch_extract_http`
+    (e.g. ``{'sleep_fn': NO_SLEEP}`` for synthetic transports).
 
     With ``state_store`` (a :class:`~course_scraper_spark.storage.crawl_state
-    .CrawlStateStore`) every wave commits its seen-set delta as a tagged
-    snapshot; ``resume=True`` continues from the last committed wave.
-    ``max_waves`` stops early after N committed waves (kill/resume tests).
-
-    ``use_filter`` ('bloom' or 'cuckoo'; ``use_bloom=True`` is the
-    back-compat spelling of 'bloom') maintains the per-bucket seen-filter
-    sidecar as a bucket-aligned DataFrame across waves — built as deltas,
-    probed via the bucket-cogrouped path in operators/bloom.py, NEVER
-    collected to the driver — and prefilters candidates before the exact
-    anti-join. Identical results (the filters have no false negatives;
-    positives hit the exact join), fewer anti-join probes.
+    .CrawlStateStore`) every wave commits its pending set and seen-set
+    delta; ``resume=True`` continues from the last committed wave.
+    ``max_waves`` stops early after N waves.
 
     ``copartition_seen``: route the seen anti-join through the
-    co-partitioned delta store (operators/seen_store.py) so the growing
-    seen side never reshuffles. ``'auto'`` (default) switches on above
-    ``COPARTITION_SEEN_THRESHOLD`` accumulated rows; ``True`` forces it
-    from wave 0 (equality tests); ``False`` disables. Results identical
-    either way (anti-join distributes over the delta union).
+    co-partitioned delta store (operators/seen_store.py). ``'auto'``
+    switches on above ``COPARTITION_SEEN_THRESHOLD`` seen rows, ``True``
+    from wave 0, ``False`` never; results are identical either way.
+    ``seen_store_factory`` returns the store to use then, e.g.
+    ``lambda: TableSeenStore(spark, table)`` for a durable seen table.
 
-    ``seen_store_factory``: zero-arg callable returning the store to use
-    when the co-partitioned path engages — pass
-    ``lambda: TableSeenStore(spark, table)`` (operators/seen_store.py)
-    to persist every wave delta to a bucketed Iceberg/snapshot table
-    (durable, resumable seen set) while keeping the identical join plan.
+    ``metrics_store`` records per-host fetch counts per wave;
+    ``salt_hosts_threshold`` spreads hosts holding more than this many
+    frontier rows across salt shards before the fetch (operators/salting.py).
     """
-    if fetch not in ("join", "http"):
-        raise ValueError(f"fetch must be 'join' or 'http', got {fetch!r}")
-    if fetch == "http":
-        if transport_factory is None:
-            raise ValueError("fetch='http' requires a transport_factory")
-        runtimes, failed = resolve_sources_transport(spark, sources, transport_factory)
-    else:
-        runtimes, failed = resolve_sources(spark, sources, pages)
-    result = CrawlResult(seen=spark.createDataFrame([], SEEN_SCHEMA), failed_sources=failed)
-    if not runtimes:
-        return result
-    dim = F.broadcast(_dim_df(spark, runtimes))
-    parts = candidate_partitions or spark.sparkContext.defaultParallelism
-
-    pages_slim = pages.select(
-        F.col("url").alias("p_url"), "host", "html", "status_code", "fetch_mode"
+    return _crawl(
+        spark, sources, pages, None,
+        make_root_filter=make_root_filter, max_rounds=max_waves,
+        salt_hosts_threshold=salt_hosts_threshold,
+        broadcast_wave_threshold=broadcast_wave_threshold, state_store=state_store,
+        resume=resume, metrics_store=metrics_store, run_id=run_id, fetch=fetch,
+        transport_factory=transport_factory, fetch_kwargs=fetch_kwargs,
+        copartition_seen=copartition_seen, seen_store_factory=seen_store_factory,
     )
-
-    # co-partitioned seen store (in-memory path only): per-wave deltas are
-    # hash-partitioned ONCE on the anti-join keys, so the growing seen
-    # side never reshuffles — the anti-join chains over the deltas and
-    # only the candidate side is exchanged (operators/seen_store.py).
-    # ADAPTIVE like the other thresholds in this engine (broadcast
-    # guards, CC branches): below COPARTITION_SEEN_THRESHOLD rows the
-    # per-wave fixed cost of delta repartition + chained joins exceeds
-    # the reshuffle it saves (measured: +1.5-2.5 s/wave at a 1.1k-URL
-    # world), so 'auto' switches the loop onto the store only once the
-    # accumulated seen crosses the threshold (the switch repartitions
-    # the current seen once, then deltas chain). The snapshot-store path
-    # reads seen back from storage instead; its co-partitioned form is
-    # the bucketed Iceberg table (storage/iceberg.py).
-    store = None
-    store_eligible = state_store is None and checkpoint and copartition_seen is not False
-
-    def _make_store():
-        if seen_store_factory is not None:
-            return seen_store_factory()
-        from .seen_store import PartitionedSeenStore
-
-        return PartitionedSeenStore(spark, ("source_id", "url"), n_partitions=parts)
-
-    if store_eligible and copartition_seen is True:
-        store = _make_store()
-
-    resumed = None
-    if state_store is not None and resume:
-        resumed = state_store.latest_wave()
-    if resumed is not None:
-        depth, seq_base, snap = resumed
-        seen = state_store.read_seen(snap)
-        wave = seen.filter(F.col("visited") & (F.col("depth") == depth)).select(
-            "source_id", "url", "host", "depth", "seq"
-        )
-        wave_rows = wave.count()
-    else:
-        # wave 0: roots, seq 1 per source
-        wave = spark.createDataFrame(
-            [(rt.source.source_id, rt.source.root_url, rt.scope_domain, 0, 1) for rt in runtimes],
-            "source_id string, url string, host string, depth int, seq long",
-        )
-        seen = wave.withColumn("visited", F.lit(True))
-        seq_base = {rt.source.source_id: 1 for rt in runtimes}
-        depth = 0
-        wave_rows = len(runtimes)
-        if state_store is not None:
-            state_store.save_wave(0, seen, seq_base)
-            seen = state_store.read_seen()
-        elif store is not None:
-            seen = store.add_delta(seen)
-            wave = seen.drop("visited")
-            seen = store.union()
-        elif checkpoint:
-            seen = seen.localCheckpoint(eager=True)
-            wave = seen.drop("visited")
-    max_depth_overall = max(rt.source.crawl_depth for rt in runtimes)
-    waves_run = 0
-    seen_rows_est = wave_rows  # tracks accumulated seen for the 'auto' switch
-
-    bloom_key = F.concat_ws("|", F.col("source_id"), F.col("url"))
-    filter_kind = use_filter or ("bloom" if use_bloom else None)
-    sidecar: DataFrame | None = None
-    if filter_kind is not None:
-        build_delta = _filter_builder(filter_kind)
-        # the sidecar stays a bucket-aligned TABLE for its whole life:
-        # checkpointed per delta (same discipline as the seen set), probed
-        # via bucket-cogrouped applyInPandas — no driver collect, no task-
-        # closure capture, so a 10^10-key filter never converges on one node.
-        sidecar = build_delta(
-            seen.withColumn("_k", bloom_key), url_col="_k", n_buckets=bloom_buckets
-        ).localCheckpoint(eager=True)
-
-    while depth < max_depth_overall:
-        if max_waves is not None and waves_run >= max_waves:
-            break
-        # -- expand filter: generic never expands AT max depth
-        #    (crawler.py:235); MC waves are already < max by construction.
-        expandable = (
-            wave.join(dim, "source_id")
-            .filter(F.col("is_mc") | (F.col("depth") < F.col("max_depth")))
-        )
-
-        # Fetch = lookup into the synthetic web. Broadcast the WAVE side:
-        # the page-body table must never shuffle (2GB of html through the
-        # exchange per wave measured 20-50s of IO noise). Inner join ==
-        # left join here: URLs without a page row have null status and
-        # are dropped by fetch_ok anyway (they stay in seen — the
-        # dead-fetch path). On a live cluster pass fetch='http' — the
-        # ladder in operators/fetch.py runs inside the UDF and no join
-        # exists at all; the broadcast is a synthetic-harness artifact,
-        # not the scale design.
-        if metrics_store is not None and fetch != "http":
-            # per-host-bucket lineage (north rule): fetched/failed per
-            # host per wave, including URLs with no page row at all
-            from .metrics import fetch_stats_per_host
-
-            joined_m = expandable.select("source_id", "url", "host").join(
-                pages_slim.select("p_url", "status_code", "fetch_mode"),
-                F.col("url") == F.col("p_url"),
-                "left",
-            )
-            metrics_store.record_wave(run_id, depth, fetch_stats_per_host(joined_m))
-
-        wave_slim = expandable.select("source_id", "url", "host", "seq", "depth", "is_mc")
-        if salt_hosts_threshold is not None:
-            # the fetch runs INSIDE the UDF over the wave's own
-            # partitioning — spread Zipf mega-hosts before that stage
-            from .salting import salted_repartition
-
-            wave_slim = salted_repartition(
-                wave_slim, "host", threshold=salt_hosts_threshold, salt_col="url"
-            )
-        fetched_raw = None
-        links_pre = None
-        if fetch == "http":
-            # live path: the HTTP ladder runs inside the UDF over the
-            # wave's partitioning — no join with a pages table exists.
-            # Fused fetch+extract either way: page html never crosses
-            # Arrow. With metrics, the fused UDF emits in-band per-host
-            # aggregates (split back out below) so the production path
-            # feeds partition_metrics without un-fusing.
-            #
-            # The wave is EXPLICITLY spread before the UDF (unless the
-            # salting stage already did): the wave inherits the delta
-            # checkpoint's partitioning, which AQE's size-based
-            # coalescing shrinks to 1-2 partitions for a few-MB delta —
-            # measured at the 200k world: a 70k-URL fetch stage ran as
-            # TWO tasks on local[8] (16 s on 2 cores, 6 idle), the
-            # dominant loop-scaling killer. An explicit numbered
-            # repartition is exempt from AQE coalescing; the shuffle
-            # moves only slim (source_id,url,host,seq,depth,is_mc)
-            # rows, never page bodies.
-            if salt_hosts_threshold is None and wave_rows and wave_rows > 1000:
-                # size-gated: a toy wave's extra shuffle costs more
-                # latency than the spread buys (measured +0.5 s/wave on
-                # the 1.5k-page bench world); coalescing starvation only
-                # matters once a wave carries real CPU work
-                wave_slim = wave_slim.repartition(parts * 2)
-            from .fetch import fetch_extract_http, split_fused_output
-
-            if metrics_store is not None:
-                # persist: the stats append AND the link pipeline both
-                # consume the fused output — fetch each URL once
-                fetched_raw = fetch_extract_http(
-                    wave_slim, transport_factory, with_stats=True,
-                    **(fetch_kwargs or {}),
-                ).persist()
-                links_pre, wave_stats = split_fused_output(fetched_raw)
-                metrics_store.record_wave(run_id, depth, wave_stats)
-            else:
-                links_pre = fetch_extract_http(
-                    wave_slim, transport_factory, **(fetch_kwargs or {})
-                )
-        else:
-            fetched = (
-                _fetch_join(
-                    wave_slim.drop("host"), pages_slim, wave_rows, broadcast_wave_threshold
-                )
-                .filter(fetch_ok_col())
-                .select(
-                    "source_id",
-                    F.col("url").alias("page_url"),
-                    F.col("seq").alias("parent_seq"),
-                    "depth",
-                    "html",
-                    "is_mc",
-                )
-            )
-            # In broadcast mode the scan partitioning of pages carries to
-            # the UDF stage — page html never shuffles; above the
-            # threshold the join shuffles both sides on url hash
-            # (uniform, skew-free).
-
-        links = (
-            links_pre
-            if links_pre is not None
-            else fetched.mapInPandas(_extract_links, _LINKS_SCHEMA)
-        ).join(dim, "source_id")
-
-        href2 = U.strip_fragment(F.col("href"))
-        cand = (
-            links.withColumn("href2", href2)
-            .filter(U.is_followable(F.col("href2")))
-            .withColumn("full_url", U.absolutize(F.col("page_url"), F.col("href2")))
-        )
-        scope_ok = F.col("include_external") | (
-            (U.host_of(F.col("full_url")) == F.col("scope_domain"))
-            & (
-                U.path_of(F.col("full_url")).startswith(F.col("root_path"))
-                if make_root_filter
-                else F.lit(True)
-            )
-        )
-        cand = cand.filter(scope_ok & ~F.rlike(F.col("full_url"), F.col("excl_regex")))
-        # one wave = one pass through fetch+extract: the candidate set
-        # feeds previews, the anti-join AND the ranking collect, so pin it
-        cand = cand.persist()
-
-        # MC side-channel: previews -> seen without visiting
-        # (crawler.py:211-212). Skipped entirely when NO source is
-        # Modern-Campus (resolve time knows): the subplan is a
-        # dedup + anti-join chain per wave, i.e. several scheduler
-        # barriers that an all-generic crawl pays for nothing.
-        if any(rt.is_mc for rt in runtimes):
-            previews = (
-                cand.filter(
-                    F.col("is_mc")
-                    & (F.col("stream") == "anchor")
-                    & F.col("full_url").contains("preview_course_nopop.php")
-                )
-                .select("source_id", F.col("full_url").alias("url"))
-                .dropDuplicates(["source_id", "url"])
-                .transform(
-                    lambda d: store.anti_join(d)
-                    if store is not None
-                    else d.join(seen.select("source_id", "url"), ["source_id", "url"], "left_anti")
-                )
-                .select(
-                    "source_id",
-                    "url",
-                    U.host_of(F.col("url")).alias("host"),
-                    F.lit(None).cast("int").alias("depth"),
-                    F.lit(None).cast("long").alias("seq"),
-                    F.lit(False).alias("visited"),
-                )
-            )
-        else:
-            previews = spark.createDataFrame([], SEEN_SCHEMA)
-
-        # queue candidates: generic = every anchor; MC = listing links to
-        # content.php. Depth gate differs per branch (crawler.py:187 vs 235).
-        next_depth = depth + 1
-        queue_cand = cand.filter(
-            F.when(
-                F.col("is_mc"),
-                (F.col("stream") == "mc_listing")
-                & F.col("full_url").contains("content.php")
-                & (F.lit(next_depth) < F.col("max_depth")),
-            ).otherwise(
-                (F.col("stream") == "anchor") & (F.lit(next_depth) <= F.col("max_depth"))
-            )
-        ).select("source_id", F.col("full_url").alias("url"), "parent_seq", "link_pos")
-
-        if filter_kind is not None:
-            from .bloom import dedup_with_bloom
-
-            new_urls = dedup_with_bloom(
-                queue_cand.withColumn("_k", bloom_key),
-                seen,
-                sidecar,
-                keys=["source_id", "url"],
-                url_col="_k",
-                n_buckets=bloom_buckets,
-                kind=filter_kind,
-                anti_join_fn=store.anti_join if store is not None else None,
-            ).drop("_k")
-        elif store is not None:
-            new_urls = store.anti_join(queue_cand)
-        else:
-            new_urls = queue_cand.join(
-                seen.select("source_id", "url"), ["source_id", "url"], "left_anti"
-            )
-        # first-occurrence dedup inside the wave: earliest (parent_seq,
-        # link_pos) wins — the queue-insertion order of the reference.
-        first = (
-            new_urls.groupBy("source_id", "url")
-            .agg(F.min(F.struct("parent_seq", "link_pos")).alias("k"))
-            .select("source_id", "url", F.col("k.parent_seq").alias("parent_seq"), F.col("k.link_pos").alias("link_pos"))
-        )
-        # jobs/wave fold (round 5): rank LAZILY, materialize the delta
-        # ONCE, then read the per-source totals back from the
-        # materialized delta at block-read cost. The old shape
-        # (assign_seq_with_totals) collected totals in a pre-job that
-        # ran the whole candidate pipeline, then the delta checkpoint
-        # ran the anti-join/agg/window AGAIN — two executions and two
-        # driver actions per wave where one of each suffices.
-        ranked = assign_seq_lazy(
-            first,
-            "source_id",
-            ["parent_seq", "link_pos"],
-            seq_col="rel_seq",
-            est_rows=wave_rows * EST_WAVE_BRANCHING if wave_rows else None,
-            num_partitions=parts,
-        )
-        base_df = F.broadcast(
-            spark.createDataFrame(
-                sorted(seq_base.items()), "source_id string, base long"
-            )
-        )
-        # LEFT join + coalesce(base, 0) (round 6, advice): an inner join
-        # would silently DROP any ranked row whose source_id is missing
-        # from seq_base (reachable via a state-store resume whose saved
-        # seq_base predates an added source); the coalesce reproduces
-        # the historical `seq_base.get(sid, 0)` fallback instead.
-        new_wave = (
-            ranked.join(base_df, "source_id", "left")
-            .select(
-                "source_id",
-                "url",
-                U.host_of(F.col("url")).alias("host"),
-                F.lit(next_depth).alias("depth"),
-                (F.col("rel_seq") + F.coalesce(F.col("base"), F.lit(0))).alias("seq"),
-            )
-        )
-        delta = new_wave.withColumn("visited", F.lit(True)).unionByName(previews)
-
-        if (
-            store is None
-            and store_eligible
-            and copartition_seen == "auto"
-            and seen_rows_est > COPARTITION_SEEN_THRESHOLD
-        ):
-            # 'auto' switch: seed the store with the accumulated seen
-            # (one repartition, once) — every later delta chains with
-            # zero reshuffles of the seen side. Decided on the PRE-wave
-            # estimate (this wave's n_new isn't known until the delta
-            # materializes below), so the store engages one wave after
-            # the threshold crossing — a heuristic either way.
-            store = _make_store()
-            seen = store.add_delta(seen)
-            seen = store.union()
-
-        # the wave's single materialization point. Round 6: the
-        # checkpoint is LAZY — the totals collect right below is the
-        # first action on it, so ONE job materializes the checkpoint
-        # (truncating the iterative lineage exactly as before) AND
-        # returns the per-source counts, where the old eager+collect
-        # pair ran two jobs and two passes per wave.
-        if store is not None:
-            delta = store.add_delta(delta)
-        elif checkpoint or state_store is not None:
-            delta = delta.localCheckpoint(eager=False)
-        totals_rows = (
-            delta.filter(F.col("visited"))
-            .groupBy("source_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        totals = {r["source_id"]: r["n"] for r in totals_rows}
-        n_new = sum(totals.values())
-        for sid, n in totals.items():
-            seq_base[sid] = seq_base.get(sid, 0) + n
-        seen_rows_est += n_new
-
-        if filter_kind is not None:
-            sidecar = sidecar.unionByName(
-                _filter_builder(filter_kind)(
-                    delta.withColumn("_k", bloom_key), url_col="_k", n_buckets=bloom_buckets
-                ).localCheckpoint(eager=True)
-            )
-            if filter_kind == "bloom" and (waves_run + 1) % 8 == 0:
-                # bound probe fan-out: one blob per wave accumulates, so
-                # fold the deltas every 8 waves (bloom only — cuckoo
-                # fingerprint tables don't OR-merge)
-                from .bloom import compact
-
-                sidecar = compact(sidecar).localCheckpoint(eager=True)
-        if state_store is not None:
-            state_store.save_wave(next_depth, delta, seq_base)
-            seen = state_store.read_seen()
-            wave = seen.filter(F.col("visited") & (F.col("depth") == next_depth)).select(
-                "source_id", "url", "host", "depth", "seq"
-            )
-        elif store is not None:
-            # the delta was partitioned on the anti-join keys ONCE, at
-            # birth (seen_store.add_delta above) — the next waves'
-            # anti-joins chain over the checkpointed deltas with zero
-            # exchanges on the seen side. seen stays a union view.
-            seen = store.union()
-            wave = delta.filter(F.col("visited")).select(
-                "source_id", "url", "host", "depth", "seq"
-            )
-        else:
-            # non-co-partitioned path: the delta checkpoint above
-            # truncates the iterative lineage to a leaf; with
-            # checkpoint=False (debug) seen stays a raw union of plans
-            seen = seen.unionByName(delta)
-            wave = delta.filter(F.col("visited")).select(
-                "source_id", "url", "host", "depth", "seq"
-            )
-        cand.unpersist()
-        if fetched_raw is not None and fetched_raw.is_cached:
-            fetched_raw.unpersist()
-        result.metrics.append(WaveMetrics(depth=next_depth, wave_size=n_new, new_urls=n_new))
-        depth = next_depth
-        wave_rows = n_new
-        waves_run += 1
-        if n_new == 0:
-            break
-
-    result.seen = seen
-    return result
 
 
 def crawl_source(
@@ -807,46 +526,50 @@ def crawl_sources_budgeted(
 ) -> CrawlResult:
     """Priority-frontier crawl with per-host politeness budgets.
 
-    The scale-mode loop (north-star "politeness scheduler + priority
-    frontier queue"): instead of fetching a whole BFS wave, each ROUND
-    schedules pending URLs per host (slot n fires at (n-1)·crawl_delay,
+    The round loop of :func:`crawl_sources` under a schedule: each round
+    slots pending URLs per host (slot n fires at (n-1)·crawl_delay,
     operators/politeness.py) and fetches only those whose start time fits
-    ``round_budget_s``; the excess stays in the frontier with its
-    original priority (seq) and is scheduled first next round — the
-    parallel form of the reference's serial crawl-delay sleeps
-    (crawler.py:150,168, render_utils.py:58).
+    ``round_budget_s``; the rest stay pending with their priority (seq)
+    — the parallel form of the reference's serial crawl-delay sleeps
+    (crawler.py:150,168, render_utils.py:58). A budget that defers
+    nothing reproduces :func:`crawl_sources` row for row; otherwise visit
+    ORDER follows the schedule, and the seen SET still equals BFS.
 
-    The final seen SET equals the unbudgeted crawl exactly — budgets
-    delay fetches, never drop them (tests/test_budgeted_crawl.py). The
-    subtle case is ``include_external=True`` with heterogeneous per-host
-    crawl delays: a URL first discovered via a DEEPER parent on a fast
-    host (while its shallow parent waits behind a slow host) gets the
-    deeper depth, and its subtree would be pruned at the depth horizon.
-    ``readmit_min_depth`` (default on) closes that gap: when a seen URL
-    is rediscovered via a shallower parent, it re-enters the frontier at
-    the improved depth and its subtree is re-expanded — depths only
-    decrease, so the loop terminates, and by induction on BFS depth the
-    final set equals BFS (test_budgeted_readmission_multi_host). Visit
-    ORDER always follows the schedule instead of strict BFS FIFO, so
-    order-equality paths use :func:`crawl_sources`.
+    ``readmit_min_depth`` (default on) keeps that set equal when
+    ``include_external=True`` meets mixed per-host delays: a URL first
+    found via a deeper parent on a fast host is re-admitted when a
+    shallower parent rediscovers it (test_budgeted_readmission_multi_host).
+    Per-host spacing holds across rounds: ``politeness.next_round_offsets``
+    carries each host's cadence remainder over the round boundary.
 
-    ``salt_hosts_threshold``: spread hosts holding more than this many
-    frontier rows across salt shards before the fetch stage
-    (operators/salting.py). ``obey_disallow``: apply robots Disallow
-    prefixes to the frontier (operators/robots.py; default off — the
-    reference reads only crawl_delay). ``fetch='http'`` routes fetches
-    through the live mapInPandas ladder (see :func:`crawl_sources`).
-
-    Per-host fetch spacing holds ACROSS rounds, not just within one:
-    ``politeness.next_round_offsets`` carries each host's cadence
-    remainder over the round boundary (and decays it through rounds the
-    host sits out entirely — the crawl_delay > budget regime), matching
-    the reference's serial sleep-after-every-fetch
-    (render_utils.py:58). ``schedule_log`` (test/debug introspection):
-    a list that receives ``(round, host, url, sched_time)`` per fetched
-    row — drives the spacing contract tests; leave None in production
-    (it collects the schedule to the driver every round).
+    ``obey_disallow`` applies robots Disallow prefixes to the frontier
+    (operators/robots.py; off by default — the reference reads only
+    crawl_delay). ``schedule_log`` (tests/debug) receives
+    ``(round, host, url, sched_time)`` per fetched row; it collects the
+    schedule every round. The other options are those of
+    :func:`crawl_sources`, with rounds in place of waves.
     """
+    budget = _Budget(robots, round_budget_s, obey_disallow, readmit_min_depth, schedule_log)
+    return _crawl(
+        spark, sources, pages, budget,
+        make_root_filter=make_root_filter, max_rounds=max_rounds,
+        salt_hosts_threshold=salt_hosts_threshold,
+        broadcast_wave_threshold=broadcast_wave_threshold, state_store=state_store,
+        resume=resume, metrics_store=metrics_store, run_id=run_id, fetch=fetch,
+        transport_factory=transport_factory, fetch_kwargs=fetch_kwargs,
+        copartition_seen=copartition_seen, seen_store_factory=seen_store_factory,
+    )
+
+
+def _crawl(spark: SparkSession, sources: list[SourceConfig], pages: DataFrame,
+           budget: _Budget | None, *, make_root_filter, max_rounds, salt_hosts_threshold,
+           broadcast_wave_threshold, state_store, resume, metrics_store, run_id, fetch,
+           transport_factory, fetch_kwargs, copartition_seen, seen_store_factory
+           ) -> CrawlResult:
+    """The round loop of both entry points: pending → fetch set (all of
+    it, or the budget's share) → fetch → links → scope filter → MC
+    previews → depth gate → seen anti-join → first-occurrence dedup →
+    seq ranking → ONE delta materialization + totals → next pending."""
     if fetch not in ("join", "http"):
         raise ValueError(f"fetch must be 'join' or 'http', got {fetch!r}")
     if fetch == "http":
@@ -859,202 +582,147 @@ def crawl_sources_budgeted(
     if not runtimes:
         return result
     dim = F.broadcast(_dim_df(spark, runtimes))
-    pages_slim = pages.select(
-        F.col("url").alias("p_url"), "host", "html", "status_code", "fetch_mode"
-    )
+    max_depth = {rt.source.source_id: rt.source.crawl_depth for rt in runtimes}
+    parts = spark.sparkContext.defaultParallelism
+    pages_slim = pages.select(F.col("url").alias("p_url"), "host", "html", "status_code", "fetch_mode")
 
-    # static dim: count once, so every schedule/robots join in the loop
-    # can gate its broadcast without re-counting
-    robots_rows = robots.count() if robots is not None else None
+    def next_pending(delta: DataFrame) -> DataFrame:
+        # the expand gate: a URL AT its source's max depth is seen but
+        # never fetched (generic: crawler.py:232-236; MC rows are
+        # enqueued only below it, crawler.py:187), so it never enters
+        # the frontier and takes no politeness slot
+        return (
+            delta.filter(F.col("visited"))
+            .join(dim, "source_id")
+            .filter(F.col("depth") < F.col("max_depth"))
+            .select(*_FRONTIER_COLS)
+        )
 
-    pending = spark.createDataFrame(
-        [(rt.source.source_id, rt.source.root_url, rt.scope_domain, 0, 1) for rt in runtimes],
-        "source_id string, url string, host string, depth int, seq long",
-    )
-    if obey_disallow and robots is not None:
-        # north-star "robots.txt rules": disallowed URLs never fetch, never
-        # expand, never enter seen. Semantic FLAG, default off: the
-        # reference reads only crawl_delay (crawler.py:144-150), so the
-        # equality paths keep delay-only behavior.
-        from .robots import filter_disallowed
+    # co-partitioned seen store (operators/seen_store.py): each delta is
+    # hash-partitioned ONCE on the anti-join keys, so the growing seen
+    # side never reshuffles; 'auto' engages it past
+    # COPARTITION_SEEN_THRESHOLD seen rows
+    store = None
 
-        pending = filter_disallowed(pending, robots, robots_rows=robots_rows)
+    def make_store():
+        if seen_store_factory is not None:
+            return seen_store_factory()
+        from .seen_store import PartitionedSeenStore
+
+        return PartitionedSeenStore(spark, ("source_id", "url"), n_partitions=parts)
+
     resumed = state_store.latest_round() if (state_store is not None and resume) else None
     if resumed is not None:
         rounds, seq_base, snap = resumed
         seen = state_store.read_seen(snap)
         pending = state_store.read_pending(rounds)
-        pending_rows_est = pending.count()  # once, at resume
+        n_pending = pending.count()
+        row = seen.agg(F.count(F.lit(1)).alias("n"), F.max("depth").alias("d")).first()
+        seen_rows, deepest = row["n"], row["d"] or 0
+        if copartition_seen is True:
+            store = make_store()
+            seen = store.add_delta(seen)
     else:
-        pending_rows_est = len(runtimes)
-        seen = pending.withColumn("visited", F.lit(True)).localCheckpoint(eager=True)
-        seq_base = {rt.source.source_id: 1 for rt in runtimes}
         rounds = 0
+        roots = spark.createDataFrame(
+            [(rt.source.source_id, rt.source.root_url, rt.scope_domain, 0, 1) for rt in runtimes],
+            "source_id string, url string, host string, depth int, seq long",
+        ).withColumn("visited", F.lit(True))
+        if budget is not None:
+            roots = budget.allowed(roots)
+        if copartition_seen is True:
+            store = make_store()
+            seen = store.add_delta(roots)
+        else:
+            seen = roots.localCheckpoint(eager=True)
+        pending = next_pending(seen)
+        if budget is not None and budget.disallow:
+            n_pending = pending.count()
+        else:
+            n_pending = sum(1 for d in max_depth.values() if d > 0)
+        seq_base = {rt.source.source_id: 1 for rt in runtimes}
+        seen_rows, deepest = len(runtimes), 0
         if state_store is not None:
             # round 0 = the root set: without it, a resume would replay
             # only the per-round deltas and lose the roots from seen
             state_store.save_round(0, seen, pending, seq_base)
+    if store is not None:
+        seen = store.union()
 
-    # co-partitioned seen store, same adaptive contract as crawl_sources
-    # (seen here is append-only too — re-admission improves expansion
-    # state in `improvements`, never rewrites seen rows). The anti-joins
-    # route through the delta chain once active; seen stays a union view
-    # for the re-admission overlay and the final result.
-    seen_store = None
-    seen_rows_est = seen.count() if copartition_seen == "auto" else 0
+    def unseen(df: DataFrame) -> DataFrame:
+        if store is not None:
+            return store.anti_join(df)
+        return df.join(seen.select("source_id", "url"), ["source_id", "url"], "left_anti")
 
-    def _make_seen_store():
-        if seen_store_factory is not None:
-            return seen_store_factory()
-        from .seen_store import PartitionedSeenStore
-
-        return PartitionedSeenStore(
-            spark, ("source_id", "url"),
-            n_partitions=spark.sparkContext.defaultParallelism,
-        )
-
-    if copartition_seen is True:
-        seen_store = _make_seen_store()
-        seen = seen_store.add_delta(seen)
-        seen = seen_store.union()
-
-    from .politeness import next_round_offsets, split_by_budget, with_schedule
-
-    # depth-improvement overlay for min-depth re-admission; in-memory
-    # only — after a resume it rebuilds from seen's first-discovery
-    # depths (an already-applied improvement may re-trigger one redundant
-    # refetch, never a wrong set)
-    improvements: DataFrame | None = None
-    # per-host cadence carry-over: a host's last fetch near the round
-    # boundary pushes its first slot next round, so per-host spacing
-    # stays >= crawl_delay ACROSS rounds (render_utils.py:58 — the
-    # reference's serial sleep never resets between waves)
-    host_offsets: DataFrame | None = None
-
-    while rounds < (max_rounds if max_rounds is not None else 10_000):
+    while n_pending and (max_rounds is None or rounds < max_rounds):
         rounds += 1
-        # slot by seq = priority; host_offsets carries last round's
-        # cadence. wave_rows: tracked frontier-size OVERESTIMATE so the
-        # lazy ranking picks two-phase before a Zipf host could funnel
-        # a mega-frontier through one window task (round 6 — the eager
-        # assign_seq totals pre-job is gone, see politeness.py).
-        sched = with_schedule(
-            pending, robots, robots_rows=robots_rows, host_offsets=host_offsets,
-            wave_rows=pending_rows_est,
-        )
-        now, deferred = split_by_budget(sched, round_budget_s)
+        if budget is None:
+            now, n_now, deferred = pending, n_pending, None
+        else:
+            now, n_now, deferred = budget.take(pending, n_pending, rounds)
+            if not n_now:
+                budget.release()
+                if not budget.wait():
+                    break
+                continue
+
+        fetch_set = now.select("source_id", "url", "host", "seq", "depth", "is_mc")
         if salt_hosts_threshold is not None:
-            # the fetch stage runs over `now`'s own partitioning on a live
-            # cluster — spread Zipf mega-hosts across salt shards first
+            # the fetch runs over the fetch set's own partitioning: spread
+            # Zipf mega-hosts before it
             from .salting import salted_repartition
 
-            now = salted_repartition(now, "host", threshold=salt_hosts_threshold, salt_col="url")
-        # jobs/round fold (round 5): persist + count materializes the
-        # schedule in ONE job where the old eager-checkpoint + count
-        # pair took two. `now`'s lineage is a single window over the
-        # checkpointed pending, so caching instead of checkpointing
-        # adds no lineage depth; the offsets agg, the schedule_log
-        # collect and the fetch pipeline all read the cache. Unpersisted
-        # at end of round.
-        now = now.persist()
-        now_cached = now  # unpersist handle (`now` is re-derived below)
-        n_now = now.count()
-        if n_now == 0:
-            now_cached.unpersist()
-            # Distinguish "done" from "idle": with cadence carry-over a
-            # round can fetch NOTHING while URLs still pend (every
-            # pending host owes more than one whole budget —
-            # crawl_delay > budget). The round still elapses, so offsets
-            # decay by one budget; they strictly decrease, so the loop
-            # always reaches a fetchable round or drains.
-            if host_offsets is None or not pending.head(1):
-                break
-            host_offsets = (
-                host_offsets.select(
-                    "host",
-                    F.greatest(F.lit(0.0), F.col("t0") - F.lit(round_budget_s)).alias("t0"),
-                )
-                .filter(F.col("t0") > 0)
-                .localCheckpoint(eager=True)
+            fetch_set = salted_repartition(
+                fetch_set, "host", threshold=salt_hosts_threshold, salt_col="url"
             )
-            continue
-        host_offsets = next_round_offsets(
-            now, host_offsets, robots, round_budget_s, robots_rows
-        ).localCheckpoint(eager=True)
-        if schedule_log is not None:
-            schedule_log.extend(
-                (rounds, r.host, r.url, r.sched_time)
-                for r in now.select("host", "url", "sched_time").collect()
-            )
-        now = now.drop("slot", "sched_time")
-        # deferred stays LAZY (fold: its old per-round checkpoint was a
-        # whole extra job): the end-of-round pending checkpoint
-        # materializes the same window-over-pending work once, inside
-        # the job it already runs.
+        elif fetch == "http" and n_now > 1000:
+            # AQE coalesces a few-MB checkpoint to 1-2 partitions (a 70k-URL
+            # fetch ran as TWO tasks on local[8]); a numbered repartition
+            # is exempt and moves only slim rows. Size-gated: on a toy
+            # round it cost +0.5 s/wave.
+            fetch_set = fetch_set.repartition(parts * 2)
 
-        if metrics_store is not None and fetch != "http":
-            # per-host-bucket lineage (north rule), same shape as the BFS
-            # loop: fetched/failed per host per round
-            from .metrics import fetch_stats_per_host
-
-            joined_m = now.select("source_id", "url", "host").join(
-                pages_slim.select("p_url", "status_code", "fetch_mode"),
-                F.col("url") == F.col("p_url"),
-                "left",
-            )
-            metrics_store.record_wave(run_id, rounds, fetch_stats_per_host(joined_m))
-
-        expandable = now.join(dim, "source_id").filter(
-            F.col("is_mc") | (F.col("depth") < F.col("max_depth"))
-        )
         fetched_raw = None
-        links_pre = None
         if fetch == "http":
-            wave_slim = expandable.select("source_id", "url", "host", "seq", "depth", "is_mc")
-            # explicit spread before the CPU-heavy fused UDF unless the
-            # salting stage already repartitioned — the round's frontier
-            # inherits checkpoint partitioning that AQE may have
-            # coalesced to 1-2 partitions (see crawl_sources)
-            if salt_hosts_threshold is None and n_now > 1000:
-                wave_slim = wave_slim.repartition(
-                    spark.sparkContext.defaultParallelism * 2
-                )
-            # fused fetch+extract either way (html never crosses Arrow);
-            # with metrics the UDF emits in-band per-host aggregates
-            from .fetch import fetch_extract_http, split_fused_output
-
+            # live path: ladder + href parser fused in one UDF (html never
+            # crosses Arrow). With metrics it also emits per-host
+            # aggregates in-band; persisted so each URL is fetched once.
             if metrics_store is not None:
-                fetched_raw = fetch_extract_http(
-                    wave_slim, transport_factory, with_stats=True,
-                    **(fetch_kwargs or {}),
+                fetched_raw = http_fetch.fetch_extract_http(
+                    fetch_set, transport_factory, with_stats=True, **(fetch_kwargs or {})
                 ).persist()
-                links_pre, round_stats = split_fused_output(fetched_raw)
-                metrics_store.record_wave(run_id, rounds, round_stats)
+                links, stats = http_fetch.split_fused_output(fetched_raw)
+                metrics_store.record_wave(run_id, rounds, stats)
             else:
-                links_pre = fetch_extract_http(
-                    wave_slim, transport_factory, **(fetch_kwargs or {})
+                links = http_fetch.fetch_extract_http(
+                    fetch_set, transport_factory, **(fetch_kwargs or {})
                 )
         else:
-            wave_slim = expandable.select("source_id", "url", "seq", "depth", "is_mc")
-            fetched = (
-                _fetch_join(wave_slim, pages_slim, n_now, broadcast_wave_threshold)
-                .filter(fetch_ok_col())
-                .select(
-                    "source_id",
-                    F.col("url").alias("page_url"),
-                    F.col("seq").alias("parent_seq"),
-                    "depth",
-                    "html",
-                    "is_mc",
+            if metrics_store is not None:
+                # fetched/failed per host per round, incl. URLs with no page
+                from .metrics import fetch_stats_per_host
+
+                joined_m = fetch_set.select("source_id", "url", "host").join(
+                    pages_slim.select("p_url", "status_code", "fetch_mode"),
+                    F.col("url") == F.col("p_url"),
+                    "left",
                 )
+                metrics_store.record_wave(run_id, rounds, fetch_stats_per_host(joined_m))
+            # fetch = lookup into the synthetic web, broadcasting the fetch
+            # set so page html never shuffles; a URL without a page row
+            # fails fetch_ok and stays in seen (the dead-fetch path)
+            links = (
+                _fetch_join(fetch_set.drop("host"), pages_slim, n_now, broadcast_wave_threshold)
+                .filter(fetch_ok_col())
+                .select("source_id", F.col("url").alias("page_url"),
+                        F.col("seq").alias("parent_seq"), "depth", "html", "is_mc")
+                .mapInPandas(_extract_links, _LINKS_SCHEMA)
             )
-        links = (
-            links_pre
-            if links_pre is not None
-            else fetched.mapInPandas(_extract_links, _LINKS_SCHEMA)
-        ).join(dim, "source_id")
+
+        href2 = U.strip_fragment(F.col("href"))
         cand = (
-            links.withColumn("href2", U.strip_fragment(F.col("href")))
+            links.join(dim, "source_id")
+            .withColumn("href2", href2)
             .filter(U.is_followable(F.col("href2")))
             .withColumn("full_url", U.absolutize(F.col("page_url"), F.col("href2")))
         )
@@ -1066,10 +734,12 @@ def crawl_sources_budgeted(
                 else F.lit(True)
             )
         )
+        # one round = one pass through fetch+extract: the candidate set
+        # feeds previews, the anti-join and re-admission, so pin it
         cand = cand.filter(scope_ok & ~F.rlike(F.col("full_url"), F.col("excl_regex"))).persist()
 
-        # MC previews side-channel — skipped when no source is MC (same
-        # rationale as crawl_sources: several per-round barriers saved)
+        # MC side-channel: previews -> seen without visiting
+        # (crawler.py:211-212); skipped when no source is Modern-Campus
         if any(rt.is_mc for rt in runtimes):
             previews = (
                 cand.filter(
@@ -1079,25 +749,18 @@ def crawl_sources_budgeted(
                 )
                 .select("source_id", F.col("full_url").alias("url"))
                 .dropDuplicates(["source_id", "url"])
-                .transform(
-                    lambda d: seen_store.anti_join(d)
-                    if seen_store is not None
-                    else d.join(seen.select("source_id", "url"), ["source_id", "url"], "left_anti")
-                )
-                .select(
-                    "source_id",
-                    "url",
-                    U.host_of(F.col("url")).alias("host"),
-                    F.lit(None).cast("int").alias("depth"),
-                    F.lit(None).cast("long").alias("seq"),
-                    F.lit(False).alias("visited"),
-                )
+                .transform(unseen)
+                .select("source_id", "url", U.host_of(F.col("url")).alias("host"),
+                        F.lit(None).cast("int").alias("depth"),
+                        F.lit(None).cast("long").alias("seq"), F.lit(False).alias("visited"))
             )
         else:
             previews = spark.createDataFrame([], SEEN_SCHEMA)
 
-        # row-level depth gates (mixed depths within one round)
-        child_depth = F.col("parent_depth") + 1
+        # queue candidates: generic = every anchor; MC = listing links to
+        # content.php. Row-level depth gate, which differs per branch
+        # (crawler.py:187 vs 235); under a budget one round mixes depths.
+        child_depth = (F.col("parent_depth") + 1).cast("int")
         queue_cand = cand.filter(
             F.when(
                 F.col("is_mc"),
@@ -1105,209 +768,83 @@ def crawl_sources_budgeted(
                 & F.col("full_url").contains("content.php")
                 & (child_depth < F.col("max_depth")),
             ).otherwise((F.col("stream") == "anchor") & (child_depth <= F.col("max_depth")))
-        ).select(
-            "source_id",
-            F.col("full_url").alias("url"),
-            "parent_seq",
-            "link_pos",
-            child_depth.cast("int").alias("depth"),
-            "max_depth",
-            "is_mc",
-        )
-        if obey_disallow and robots is not None:
-            from .robots import filter_disallowed
+        ).select("source_id", F.col("full_url").alias("url"), "parent_seq", "link_pos",
+                 child_depth.alias("depth"), "max_depth", "is_mc")
+        if budget is not None:
+            queue_cand = budget.allowed(queue_cand)
 
-            queue_cand = filter_disallowed(
-                queue_cand.withColumn("host", U.host_of(F.col("url"))), robots,
-                robots_rows=robots_rows,
-            ).drop("host")
-        if seen_store is not None:
-            new_urls = seen_store.anti_join(queue_cand)
-        else:
-            new_urls = queue_cand.join(
-                seen.select("source_id", "url"), ["source_id", "url"], "left_anti"
-            )
+        # candidates are checked against seen at extraction time; in-round
+        # duplicates resolve first-occurrence: earliest (parent_seq,
+        # link_pos) wins — the queue-insertion order of the reference
         first = (
-            new_urls.groupBy("source_id", "url")
-            .agg(F.min(F.struct("parent_seq", "link_pos", "depth", "max_depth", "is_mc")).alias("k"))
-            .select("source_id", "url", "k.parent_seq", "k.link_pos", "k.depth", "k.max_depth", "k.is_mc")
+            unseen(queue_cand)
+            .groupBy("source_id", "url")
+            .agg(F.min(F.struct("parent_seq", "link_pos", "depth")).alias("k"))
+            .select("source_id", "url", "k.parent_seq", "k.link_pos", "k.depth")
         )
-        # jobs/round fold: rank lazily, materialize the delta once (at
-        # the store/checkpoint below), read totals back from the
-        # materialized delta — see the crawl_sources twin for the shape.
-        ranked = assign_seq_lazy(
-            first,
-            "source_id",
-            ["parent_seq", "link_pos"],
-            seq_col="rel_seq",
-            est_rows=n_now * EST_WAVE_BRANCHING if n_now else None,
-            num_partitions=spark.sparkContext.defaultParallelism,
-        )
+        # rank LAZILY; the delta below is materialized ONCE and the
+        # per-source totals are read back from its blocks
+        ranked = assign_seq_lazy(first, "source_id", ["parent_seq", "link_pos"], seq_col="rel_seq",
+                                 est_rows=n_now * EST_WAVE_BRANCHING, num_partitions=parts)
         base_df = F.broadcast(
-            spark.createDataFrame(
-                sorted(seq_base.items()), "source_id string, base long"
-            )
+            spark.createDataFrame(sorted(seq_base.items()), "source_id string, base long")
         )
-        # left + coalesce(base, 0): see the crawl_sources twin (a
-        # resume-added source must not silently lose its URLs)
-        new_rows = ranked.join(base_df, "source_id", "left").select(
-            "source_id",
-            "url",
-            U.host_of(F.col("url")).alias("host"),
-            "depth",
+        # LEFT join + coalesce: a source missing from a resumed seq_base
+        # must not silently lose its URLs
+        delta = ranked.join(base_df, "source_id", "left").select(
+            "source_id", "url", U.host_of(F.col("url")).alias("host"), "depth",
             (F.col("rel_seq") + F.coalesce(F.col("base"), F.lit(0))).alias("seq"),
-            "max_depth",
-            "is_mc",
-        )
+            F.lit(True).alias("visited"),
+        ).unionByName(previews)
 
-        # generic rows AT max depth are seen-but-never-fetched
-        # (crawler.py:232-236): they enter seen, not the frontier
-        fetchable_new = new_rows.filter(
-            F.col("is_mc") | (F.col("depth") < F.col("max_depth"))
-        ).select("source_id", "url", "host", "depth", "seq")
+        readmit, n_readmit = None, 0
+        if budget is not None and budget.readmit:
+            readmit, n_readmit = budget.readmissions(queue_cand, seen, store, deepest)
 
-        n_readmit = 0
-        readmit = None
-        qkeys = seen_cand = None  # unpersist handles (store-path lookups)
-        if readmit_min_depth:
-            # min-depth re-admission: a seen URL rediscovered via a
-            # SHALLOWER parent re-enters the frontier at the improved
-            # depth (keeping its original seq/priority) so its subtree
-            # is re-expanded — restores BFS-set equality near the depth
-            # horizon under include_external + mixed delays. `known` =
-            # first-discovery depths (in seen) overlaid with prior
-            # improvements; a key's best depth strictly decreases, so
-            # re-admissions terminate. Seen itself is never rewritten —
-            # set membership is already correct, only expansion state
-            # improves.
-            if seen_store is not None:
-                # candidate-scoped lookup via the store: a plain
-                # known/redisc join against `seen` reshuffles the whole
-                # seen side EVERY round (the same O(|seen|) cost the
-                # anti-join chain eliminates). semi_rows pulls only the
-                # seen rows whose key this round's candidates touch —
-                # candidate-scale — with zero exchanges on the delta
-                # sides. known_min over that subset is equivalent: keys
-                # outside the candidate set never join redisc anyway.
-                # persist (not checkpoint): both caches materialize
-                # lazily inside the readmit count job below — the old
-                # two eager checkpoints were two extra jobs per round
-                qkeys = (
-                    queue_cand.select("source_id", "url")
-                    .dropDuplicates()
-                    .persist()
-                )
-                seen_cand = seen_store.semi_rows(
-                    qkeys, ["source_id", "url", "host", "depth", "seq", "visited"]
-                ).persist()
-                known = seen_cand.filter(
-                    F.col("visited") & F.col("depth").isNotNull()
-                ).select("source_id", "url", "depth")
-                if improvements is not None:
-                    known = known.unionByName(
-                        improvements.join(qkeys, ["source_id", "url"], "left_semi")
-                    )
-                seen_keys = seen_cand.select("source_id", "url").distinct()
-                seen_visited = seen_cand.filter(F.col("visited")).select(
-                    "source_id", "url", "host", "seq"
-                )
-            else:
-                known = seen.filter(F.col("visited") & F.col("depth").isNotNull()).select(
-                    "source_id", "url", "depth"
-                )
-                if improvements is not None:
-                    known = known.unionByName(improvements)
-                seen_keys = seen.select("source_id", "url")
-                seen_visited = seen.filter(F.col("visited")).select(
-                    "source_id", "url", "host", "seq"
-                )
-            known_min = known.groupBy("source_id", "url").agg(
-                F.min("depth").alias("known_depth")
-            )
-            redisc = (
-                queue_cand.join(seen_keys, ["source_id", "url"], "left_semi")
-                .groupBy("source_id", "url")
-                .agg(F.min(F.struct("depth", "max_depth", "is_mc")).alias("k"))
-                .select("source_id", "url", "k.depth", "k.max_depth", "k.is_mc")
-            )
-            improved = redisc.join(known_min, ["source_id", "url"]).filter(
-                F.col("depth") < F.col("known_depth")
-            )
-            readmit = (
-                improved.filter(F.col("is_mc") | (F.col("depth") < F.col("max_depth")))
-                .select("source_id", "url", "depth")
-                .join(seen_visited, ["source_id", "url"])
-                .select("source_id", "url", "host", "depth", "seq")
-                .persist()  # fold: one count job materializes the cache
-            )
-            n_readmit = readmit.count()
-            if n_readmit:
-                imp_delta = improved.select("source_id", "url", "depth").localCheckpoint(
-                    eager=True
-                )
-                improvements = (
-                    imp_delta if improvements is None else improvements.unionByName(imp_delta)
-                )
-
-        delta = (
-            new_rows.select("source_id", "url", "host", "depth", "seq")
-            .withColumn("visited", F.lit(True))
-            .unionByName(previews)
-        )
-        if (
-            seen_store is None
-            and copartition_seen == "auto"
-            and seen_rows_est > COPARTITION_SEEN_THRESHOLD
-        ):
-            # decided on the pre-round estimate (this round's n_new isn't
-            # known until the delta materializes below) — the store
-            # engages one round after the crossing, a heuristic either way
-            seen_store = _make_seen_store()
-            seen = seen_store.add_delta(seen)  # one-time seed repartition
-        # the round's single materialization of the delta; totals read
-        # back from the materialized blocks (jobs/round fold)
-        if seen_store is not None:
-            delta = seen_store.add_delta(delta)
-            seen = seen_store.union()
+        if store is None and copartition_seen == "auto" and seen_rows > COPARTITION_SEEN_THRESHOLD:
+            # seed the store with the accumulated seen: one repartition,
+            # once; later deltas chain with no reshuffle of seen
+            store = make_store()
+            store.add_delta(seen)
+        # the round's single materialization: the store's partitioned
+        # checkpoint, or a LAZY one whose first action is the totals
+        # collect below — one job materializes the delta AND counts it
+        if store is not None:
+            delta = store.add_delta(delta)
+            seen = store.union()
         else:
-            # LAZY checkpoint (round 6): the totals collect below is the
-            # first action — one job materializes + counts (jobs/round fold)
             delta = delta.localCheckpoint(eager=False)
             seen = seen.unionByName(delta)
-        totals_rows = (
-            delta.filter(F.col("visited"))
-            .groupBy("source_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        totals = {r["source_id"]: r["n"] for r in totals_rows}
-        n_new = sum(totals.values())
-        for sid, n in totals.items():
-            seq_base[sid] = seq_base.get(sid, 0) + n
-        seen_rows_est += n_new
-        # frontier estimate for next round's ranking-strategy pick:
-        # deferred (≤ pending - n_now) + new + readmitted — kept as an
-        # overestimate (never subtract fetched-and-dropped rows)
-        pending_rows_est = max(0, pending_rows_est - n_now) + n_new + n_readmit
-        pending = deferred.unionByName(fetchable_new)
-        if readmit is not None and n_readmit:
-            pending = pending.unionByName(readmit)
-        pending = pending.localCheckpoint(eager=True)
+        n_new = n_fetchable = 0
+        totals = delta.filter(F.col("visited")).groupBy("source_id", "depth").agg(
+            F.count(F.lit(1)).alias("n"))
+        for r in totals.collect():
+            seq_base[r["source_id"]] = seq_base.get(r["source_id"], 0) + r["n"]
+            n_new += r["n"]
+            if r["depth"] < max_depth[r["source_id"]]:
+                n_fetchable += r["n"]
+            deepest = max(deepest, r["depth"])
+        seen_rows += n_new
+
+        if budget is None:
+            pending, n_pending = next_pending(delta), n_fetchable
+        else:
+            # truncates the deferred chain; LAZY unless re-admitted rows
+            # ride along, which must materialize before release() drops
+            # their cache (or the next round would recompute the fetch)
+            pending = deferred.unionByName(next_pending(delta))
+            if n_readmit:
+                pending = pending.unionByName(readmit)
+            pending = pending.localCheckpoint(eager=bool(n_readmit))
+            n_pending += n_fetchable + n_readmit - n_now
         if state_store is not None:
             state_store.save_round(rounds, delta, pending, seq_base)
         cand.unpersist()
-        now_cached.unpersist()
-        if readmit is not None:
-            readmit.unpersist()
-        if qkeys is not None:
-            qkeys.unpersist()
-        if seen_cand is not None:
-            seen_cand.unpersist()
-        if fetched_raw is not None and fetched_raw.is_cached:
+        if fetched_raw is not None:
             fetched_raw.unpersist()
-        result.metrics.append(WaveMetrics(depth=rounds, wave_size=n_new, new_urls=n_new))
-        if n_new == 0 and n_readmit == 0 and deferred.isEmpty():
-            break
+        if budget is not None:
+            budget.release()
+        result.metrics.append(WaveMetrics(depth=rounds, wave_size=n_now, new_urls=n_new))
 
     result.seen = seen
     return result

@@ -14,9 +14,8 @@ backlog behind a slow host.
 Scheduling never changes WHAT gets crawled, only WHEN — the equality
 invariants (seen set, visit order) are unaffected because deferral
 preserves seq order per host and the anti-join happens before
-scheduling. Used by the throughput path (bench) and exported as the
-``q_politeness_schedule`` oracle-checked query; the streaming form is
-``streaming/waves.streaming_politeness_slots``.
+scheduling. Used by the budgeted crawl (operators/frontier.py) and
+exported as the ``q_politeness_schedule`` oracle-checked query.
 """
 
 from __future__ import annotations

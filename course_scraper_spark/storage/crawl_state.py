@@ -1,18 +1,18 @@
-"""Resumable crawl state: seen-set snapshots + per-wave checkpoint tags.
+"""Resumable crawl state: seen-set deltas + the pending frontier, per round.
 
 The reference resumes by skipping whole stages whose outputs already
 exist in the DB (``src/main.py:165-176,189-251``). Our engine is finer:
-every BFS wave commits the seen-set delta to a bucketed snapshot table,
-tagged ``wave_{k}`` and carrying the per-source sequence counters in the
-commit metadata — so a killed crawl resumes from the last completed wave
-with identical final state (tests/test_resume.py).
+every crawl round (a BFS wave, or a budgeted politeness round) commits
+its pending set and its seen-set delta, tagged ``round_{k}`` and
+carrying the per-source sequence counters in the commit metadata — so a
+killed crawl resumes from the last completed round with identical final
+state (tests/test_resume.py, tests/test_budgeted_crawl.py).
 
-The seen table buckets by host (explicit hash partitioning): the
-per-wave anti-join and the bloom sidecar probe both align with this
-layout.
+Both tables bucket by host (explicit hash partitioning), the layout the
+per-round anti-join and the politeness schedule align with.
 
 Backend note: this store leans on the emulation's per-commit ``meta``
-dict (seq counters ride the wave/round commit). Iceberg's equivalent is
+dict (seq counters ride the round commit). Iceberg's equivalent is
 the snapshot SUMMARY map, which Spark SQL cannot set — binding this
 store to ``storage.iceberg.IcebergTable`` needs either the Iceberg Java
 commit API for summary properties or a tiny side table keyed by tag;
@@ -36,40 +36,17 @@ from .snaptable import SnapshotTable
 
 
 class CrawlStateStore:
+    """Round-checkpointed crawl state in two tables: ``url_seen``
+    (append-only deltas) and ``frontier`` (the pending queue —
+    OVERWRITTEN per round, the copy-on-write shape a mutable queue table
+    takes in Iceberg)."""
+
     def __init__(self, spark: SparkSession, root: str, n_buckets: int = 32):
         self.spark = spark
         self.root = root
         self.seen = SnapshotTable.create(
             spark, os.path.join(root, "url_seen"), bucket_col="host", n_buckets=n_buckets
         )
-
-    def save_wave(self, depth: int, delta: DataFrame, seq_base: dict[str, int]) -> int:
-        return self.seen.append(
-            delta, tag=f"wave_{depth}", meta={"depth": depth, "seq_base": seq_base}
-        )
-
-    def latest_wave(self) -> tuple[int, dict[str, int], int] | None:
-        """(depth, seq_base, snapshot_id) of the last committed wave."""
-        for c in reversed(self.seen.commits):
-            if c.tag and c.tag.startswith("wave_"):
-                return int(c.meta["depth"]), dict(c.meta["seq_base"]), c.id
-        return None
-
-    def read_seen(self, snapshot_id: int | None = None) -> DataFrame:
-        return self.seen.read(snapshot_id=snapshot_id)
-
-
-class BudgetedStateStore(CrawlStateStore):
-    """Round-checkpointed state for the budgeted priority-frontier loop.
-
-    Two tables: ``url_seen`` (append-only deltas, inherited) and
-    ``frontier`` (the pending queue — OVERWRITTEN per round, the
-    copy-on-write shape a mutable queue table takes in Iceberg). A killed
-    run resumes from the last completed round with identical final state
-    (tests/test_budgeted_crawl.py::test_budgeted_resume)."""
-
-    def __init__(self, spark: SparkSession, root: str, n_buckets: int = 32):
-        super().__init__(spark, root, n_buckets)
         self.frontier = SnapshotTable.create(
             spark, os.path.join(root, "frontier"), bucket_col="host", n_buckets=n_buckets
         )
@@ -99,6 +76,9 @@ class BudgetedStateStore(CrawlStateStore):
             if c.tag and c.tag.startswith("round_") and c.tag in frontier_tags:
                 return int(c.meta["round"]), dict(c.meta["seq_base"]), c.id
         return None
+
+    def read_seen(self, snapshot_id: int | None = None) -> DataFrame:
+        return self.seen.read(snapshot_id=snapshot_id)
 
     def read_pending(self, rnd: int) -> DataFrame:
         return self.frontier.read(tag=f"round_{rnd}")

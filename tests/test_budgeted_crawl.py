@@ -25,6 +25,20 @@ def test_budgeted_seen_set_equals_bfs(spark, sources, pages, robots):
     assert len(budgeted.metrics) > len(bfs.metrics)
 
 
+def test_unbounded_budget_reproduces_bfs_rows(spark, sources, pages):
+    """A budget that defers nothing (no robots: 1 s per slot, far inside
+    the budget) is the BFS schedule: the same rows, depths, seqs and
+    visited flags, in the same number of rounds."""
+    bfs = crawl_sources(spark, sources, pages)
+    budgeted = crawl_sources_budgeted(spark, sources, pages, round_budget_s=1e9)
+    canon = lambda r: sorted(
+        (x.source_id, x.url, x.depth, x.seq, x.visited)
+        for x in r.seen.select("source_id", "url", "depth", "seq", "visited").collect()
+    )
+    assert canon(budgeted) == canon(bfs)
+    assert len(budgeted.metrics) == len(bfs.metrics)
+
+
 def test_budget_caps_per_round(spark, sources, pages, robots):
     budgeted = crawl_sources_budgeted(
         spark, sources, pages, robots=robots, round_budget_s=3.0, max_rounds=2
@@ -41,11 +55,11 @@ def test_budgeted_resume_equals_uninterrupted(spark, sources, pages, robots, tmp
     """Kill after round k, resume from the round checkpoint: final seen
     set identical to the uninterrupted budgeted run (north rule:
     resumable from checkpoint)."""
-    from course_scraper_spark.storage.crawl_state import BudgetedStateStore
+    from course_scraper_spark.storage.crawl_state import CrawlStateStore
 
     full = crawl_sources_budgeted(spark, sources, pages, robots=robots, round_budget_s=8.0)
 
-    store = BudgetedStateStore(spark, str(tmp_path / "bstate"), n_buckets=8)
+    store = CrawlStateStore(spark, str(tmp_path / "bstate"), n_buckets=8)
     crawl_sources_budgeted(
         spark, sources, pages, robots=robots, round_budget_s=8.0,
         state_store=store, max_rounds=2,

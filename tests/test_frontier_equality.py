@@ -48,23 +48,6 @@ def test_mc_previews_not_visited(crawl_result, sources, store):
     assert set(previews) <= got_seen
 
 
-def test_bloom_prefiltered_crawl_identical(spark, sources, pages, crawl_result):
-    """The bloom sidecar is a pure prefilter: the crawl result is
-    bit-identical with it on."""
-    with_bloom = crawl_sources(spark, sources, pages, use_bloom=True, bloom_buckets=16)
-    for s in sources:
-        assert with_bloom.seen_urls(s.source_id) == crawl_result.seen_urls(s.source_id)
-        assert with_bloom.visit_order(s.source_id) == crawl_result.visit_order(s.source_id)
-
-
-def test_cuckoo_prefiltered_crawl_identical(spark, sources, pages, crawl_result):
-    """Same contract with the deletable cuckoo sidecar swapped in."""
-    with_cuckoo = crawl_sources(spark, sources, pages, use_filter="cuckoo", bloom_buckets=16)
-    for s in sources:
-        assert with_cuckoo.seen_urls(s.source_id) == crawl_result.seen_urls(s.source_id)
-        assert with_cuckoo.visit_order(s.source_id) == crawl_result.visit_order(s.source_id)
-
-
 def test_failed_fetches_stay_in_seen(crawl_result, sources, store):
     any_failed = False
     for s in sources:

@@ -1,10 +1,8 @@
-"""Round-3 fixes: driver-collect hygiene, broadcast guards, cuckoo build
-convergence, crash-safe round commits, IVF NaN guard + k-means centroids,
-LSH plane scaling."""
+"""Round-3 fixes: driver-collect hygiene, broadcast guards, crash-safe
+round commits, IVF NaN guard + k-means centroids, LSH plane scaling."""
 
 import math
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -82,61 +80,13 @@ def test_politeness_schedule_broadcast_guard(spark):
     )
 
 
-# -- cuckoo build converges or raises ---------------------------------------
-
-
-class _FlakyFilter:
-    """First two capacities 'fail' to place one key; third succeeds."""
-
-    calls = []
-
-    def __init__(self, n_keys):
-        self.n_keys = n_keys
-        type(self).calls.append(n_keys)
-        from course_scraper_spark.operators.cuckoo import CuckooFilter
-
-        self._real = CuckooFilter(n_keys=n_keys)
-        self.n_buckets = self._real.n_buckets
-        self.table = self._real.table
-
-    def insert_many(self, h):
-        if len(type(self).calls) < 3:
-            return 1  # pretend one key failed to place
-        return self._real.insert_many(h)
-
-
-class _AlwaysFailFilter(_FlakyFilter):
-    def insert_many(self, h):
-        return 1
-
-
-def test_cuckoo_build_filter_doubles_until_complete():
-    from course_scraper_spark.operators.cuckoo import build_filter
-
-    _FlakyFilter.calls = []
-    h = np.arange(1000, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
-    cf = build_filter(h, filter_cls=_FlakyFilter)
-    # capacity doubled on each retry: 1000, 2000, 4000
-    assert _FlakyFilter.calls == [1000, 2000, 4000]
-    assert cf._real.contains_many(h).all()  # every key actually present
-
-
-def test_cuckoo_build_filter_raises_loudly():
-    from course_scraper_spark.operators.cuckoo import build_filter
-
-    _AlwaysFailFilter.calls = []
-    h = np.arange(10, dtype=np.uint64)
-    with pytest.raises(RuntimeError, match="failed to place"):
-        build_filter(h, filter_cls=_AlwaysFailFilter)
-
-
 # -- budgeted round commit is crash-safe ------------------------------------
 
 
 def test_latest_round_skips_orphaned_seen_tag(spark, tmp_path):
-    from course_scraper_spark.storage.crawl_state import BudgetedStateStore
+    from course_scraper_spark.storage.crawl_state import CrawlStateStore
 
-    store = BudgetedStateStore(spark, str(tmp_path / "bst"), n_buckets=4)
+    store = CrawlStateStore(spark, str(tmp_path / "bst"), n_buckets=4)
     seen0 = spark.createDataFrame(
         [("s", "https://a.edu/", "a.edu", 0, 1, True)],
         "source_id string, url string, host string, depth int, seq long, visited boolean",
@@ -150,7 +100,7 @@ def test_latest_round_skips_orphaned_seen_tag(spark, tmp_path):
     rnd, seq_base, _snap = store.latest_round()
     assert rnd == 1 and seq_base == {"s": 2}
     # and an orphaned SEEN tag (old ordering / partial history) also falls back
-    store2 = BudgetedStateStore(spark, str(tmp_path / "bst2"), n_buckets=4)
+    store2 = CrawlStateStore(spark, str(tmp_path / "bst2"), n_buckets=4)
     store2.save_round(0, seen0, pend0, {"s": 1})
     store2.seen.append(seen0, tag="round_1", meta={"round": 1, "seq_base": {"s": 9}})
     rnd2, seq2, _ = store2.latest_round()

@@ -69,9 +69,7 @@ def main() -> None:
     robots = spark.createDataFrame([(h, 0.01) for h in hosts], "host string, crawl_delay double")
 
     t0 = time.time()
-    oracle = crawl_sources(
-        spark, sources, pages, candidate_partitions=args.cpus, copartition_seen=False
-    )
+    oracle = crawl_sources(spark, sources, pages, copartition_seen=False)
     oracle_keys = oracle.seen.select("source_id", "url").cache()
     n_oracle = oracle_keys.count()
     wall_oracle = time.time() - t0

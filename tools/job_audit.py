@@ -81,7 +81,7 @@ def main() -> None:
 
     j0, t0 = count_jobs(sc), time.time()
     if args.loop == "bfs":
-        res = crawl_sources(spark, sources, pages, candidate_partitions=args.cpus, **kw)
+        res = crawl_sources(spark, sources, pages, **kw)
         rounds = len(res.metrics)
     else:
         res = crawl_sources_budgeted(

@@ -195,7 +195,7 @@ def worker(cpus: int, stage: str) -> None:
         sources, schemas = _sources_and_schemas(spark, spec)
         t0 = time.time()
         res = crawl_sources(
-            spark, sources, pages_df, candidate_partitions=cpus,
+            spark, sources, pages_df,
             fetch="http", transport_factory=spec_transport_factory(spec),
             fetch_kwargs={"sleep_fn": NO_SLEEP},
         )
@@ -214,7 +214,7 @@ def worker(cpus: int, stage: str) -> None:
         pages_df.count()
         sources, schemas = _sources_and_schemas(spark, spec)
         t0 = time.time()
-        res = crawl_sources(spark, sources, pages_df, candidate_partitions=cpus)
+        res = crawl_sources(spark, sources, pages_df)
         seen = res.seen.cache()
         n_seen = seen.count()
         out = scrape_targets(seen.select("source_id", "url"), pages_df, schemas, parse_partitions=cpus)
