@@ -40,8 +40,7 @@ def full_budgeted(spark, sources, pages, robots):
     return crawl_sources_budgeted(spark, sources, pages, robots=robots, round_budget_s=8.0)
 
 
-@pytest.mark.parametrize("kill", KILL_POINTS)
-def test_resume_equals_uninterrupted(spark, sources, pages, tmp_path, full, kill):
+def check_bfs_resume(spark, sources, pages, tmp_path, full, kill):
     store = CrawlStateStore(spark, str(tmp_path / "state"), n_buckets=8)
     partial = crawl_sources(
         spark, sources, pages, state_store=store, max_waves=kill_round(full, kill)
@@ -51,6 +50,15 @@ def test_resume_equals_uninterrupted(spark, sources, pages, tmp_path, full, kill
     resumed = crawl_sources(spark, sources, pages, state_store=store, resume=True)
     assert canon(resumed.seen) == canon(full.seen)
     assert resumed.seen.count() > n_partial  # the kill actually cut it short
+
+
+def test_resume_equals_uninterrupted(spark, sources, pages, tmp_path, full):
+    check_bfs_resume(spark, sources, pages, tmp_path, full, "middle")
+
+
+@pytest.mark.parametrize("kill", ["first", "last"])
+def test_resume_at_kill_point(spark, sources, pages, tmp_path, full, kill):
+    check_bfs_resume(spark, sources, pages, tmp_path, full, kill)
 
 
 @pytest.mark.parametrize("kill", KILL_POINTS)
