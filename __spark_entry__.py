@@ -296,7 +296,9 @@ def q_merge_tally(spark, sf):
     (merged, num_inserted, num_updated)) as pure Column algebra over the
     same existing/scraped split as q_merge_upsert — per-source outcome
     counts of the K6 upsert, the DataFrame twin of the backends'
-    ``last_commit_tally()`` (storage/snaptable.py, storage/iceberg.py)."""
+    ``last_commit_tally()`` (storage/snaptable.py observes the same
+    counts on the rows its MERGE writes; storage/iceberg.py reads them
+    from the snapshot summary)."""
     documents = _t(spark, sf, "documents")
     existing = documents.filter(
         F.col("source").isin("src0", "src1", "src2", "src3", "src4")

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..storage.snaptable import SnapshotTable
@@ -79,31 +79,37 @@ def merge_courses(
     Stats follow the reference's PER-OCCURRENCE tally
     (merge_courses.py:15-56: a key scraped twice and absent from the
     table counts inserted=1 THEN updated=1): inserted = distinct keys
-    not already in the table, updated = every other scraped row. Both
-    come from ONE aggregation job over the batch left-joined to the
-    existing key set — not separate count() actions per side."""
+    not already in the table, updated = every other scraped row. Into a
+    filled table both come from the MERGE's own pass: inserted is its
+    tally (the batch is deduped by key, so each new key inserts once)
+    and the scraped row count is observed on the batch as the MERGE
+    reads it. An empty table takes them from one aggregation job."""
     src_all = with_merge_keys(scraped)
+    if table.is_empty():
+        stats = occurrence_stats(src_all, existing_keys=None)
+        table.append(_latest_per_key(src_all, seq_col))
+        return stats
+
+    rows = Observation()
+    table.merge(
+        _latest_per_key(src_all.observe(rows, F.count(F.lit(1)).alias("n")), seq_col),
+        on=["k_code", "k_title"],
+        update_cols=["course_description", "course_credits"],
+        insert=True,
+    )
+    inserted, _ = table.last_commit_tally()
+    return MergeStats(inserted=inserted, updated=rows.get["n"] - inserted)
+
+
+def _latest_per_key(src_all: DataFrame, seq_col: str | None) -> DataFrame:
+    """One row per merge key: the highest ``seq_col`` (the reference's
+    last occurrence), or any when there is no order."""
     if seq_col is not None:
         w = Window.partitionBy("k_code", "k_title").orderBy(F.col(seq_col).desc())
         deduped = src_all.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
     else:
         deduped = src_all.dropDuplicates(["k_code", "k_title"])
-    src = deduped.select(*TABLE_COLS)
-
-    if table.is_empty():
-        stats = occurrence_stats(src_all, existing_keys=None)
-        table.append(src)
-        return stats
-
-    stats = occurrence_stats(src_all, table.read().select("k_code", "k_title"))
-
-    table.merge(
-        src,
-        on=["k_code", "k_title"],
-        update_cols=["course_description", "course_credits"],
-        insert=True,
-    )
-    return stats
+    return deduped.select(*TABLE_COLS)
 
 
 def create_courses_table(spark, path: str) -> SnapshotTable:

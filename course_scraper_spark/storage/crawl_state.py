@@ -21,9 +21,14 @@ sandbox has no jar to validate either route, so the emulated backend
 stays the default here (unlike MetricsStore, whose interface both
 backends already satisfy). The A6 insert/update tally is closed since
 round 5: both backends expose ``last_commit_tally()`` — exact counts
-from the emulation's merge join, Iceberg's from the native snapshot
-summary (inserted exact; updated = the copy-on-write file-level bound)
-— contract-tested per backend in tests/test_table_backends.py.
+observed on the rows the emulation's MERGE writes, Iceberg's from the
+native snapshot summary (inserted exact; updated = the copy-on-write
+file-level bound) — contract-tested per backend in
+tests/test_table_backends.py.
+
+A round commit is two one-pass writes (the frontier overwrite and the
+seen append), each one shuffle by bucket and one parquet write with its
+row count and bucket list observed on the write itself.
 """
 
 from __future__ import annotations

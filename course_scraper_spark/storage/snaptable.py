@@ -14,20 +14,39 @@ Semantics provided:
 * **snapshot / tag reads** (time travel) — the resume path.
 * **bucket partitioning**: tables may declare ``bucket_col`` —
   rows carry ``_bucket = pmod(xxhash64(col), n_buckets)`` and a MERGE
-  rewrites ONLY the buckets present in its source (partition-scoped
+  commits ONLY the buckets present in its source (partition-scoped
   rewrite = the Iceberg copy-on-write behavior). This is the explicit
   hash-partition-on-host design the north rule requires: url_seen and
-  urls tables bucket by host, so a wave's MERGE touches just the hosts
+  urls tables bucket by host, so a wave's MERGE rewrites just the hosts
   in that wave.
 * **MERGE INTO** (storage.py:227-246 K1, :248-276 K2, merge_courses.py
   K6): match on key columns (null-safe), update named columns on match,
   insert unmatched source rows.
 
+Every write is one pass: one scan of its inputs, one shuffle by
+``_bucket`` and one parquet write. The row count, the set of buckets the
+new dir holds and, for a MERGE, the insert/update tally are observed
+(``DataFrame.observe``) on the frame being written, so no job reads the
+output back. Each commit records its dir's schema, so reads skip parquet
+schema inference (commits written before schemas were recorded fall
+back to it).
+
+A MERGE unions the target (with its stored ``_bucket``) and the source,
+each row marked with its side, and repartitions the union by
+``_bucket``; one Arrow call per partition then joins the sides on the
+keys (null-safe: NULL matches NULL) and emits matched, target-only and
+inserted rows with a status marker the tallies are observed from. The
+target scan is NOT pruned to the source's buckets — the whole target is
+shuffled, and rows of buckets the source does not touch are dropped
+inside the Arrow call, so the commit lists only the buckets the output
+holds. Values are moved with Arrow ``take``, never through pandas
+dtypes, so longs and nullable columns round-trip exactly.
+
 Reads reconstruct the live file set per bucket by replaying the log:
 append adds a dir to a bucket's list, overwrite/merge replaces the
-affected buckets' lists. Every data file holds a single ``_bucket``
-run (we repartition by bucket before writing) so parquet min/max stats
-prune bucket-filtered reads.
+affected buckets' lists. A read filters each dir on its live buckets;
+files hold whole buckets (every write shuffles by ``_bucket``), so
+parquet min/max stats prune the filter.
 """
 
 from __future__ import annotations
@@ -36,12 +55,19 @@ import json
 import os
 import uuid
 from dataclasses import dataclass, field
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ByteType, StructField, StructType
 
 _LOG = "snapshots.json"
 ALL = "__all__"
+# MERGE row markers: the side a row came from, and the written row's outcome
+_SIDE = "__merge_side"
+_STATUS = "__merge_status"
+_TARGET_ONLY, _MATCHED, _INSERTED = 0, 1, 2
 
 
 @dataclass
@@ -52,6 +78,7 @@ class Commit:
     buckets: list[int] | None  # None = all buckets affected
     tag: str | None = None
     meta: dict = field(default_factory=dict)
+    schema: dict | None = None  # the dir's schema (StructType JSON); None = infer
 
 
 class SnapshotTable:
@@ -101,41 +128,46 @@ class SnapshotTable:
         n = int(self.props["n_buckets"])
         return df.withColumn("_bucket", F.pmod(F.xxhash64(F.col(bc)), F.lit(n)).cast("int"))
 
-    def _write_dir(self, df: DataFrame) -> tuple[str, list[int], int]:
-        b = self._bucketed(df).repartition(F.col("_bucket"))
+    def _write_dir(self, df: DataFrame, **tallies: Column) -> tuple[str, dict, dict]:
+        """Writes ``df`` (bucketed, partitioned by ``_bucket``) as a new
+        data dir. Returns (dir, schema, observed) where ``observed`` holds
+        ``rows``, the sorted ``buckets`` the dir holds and each of
+        ``tallies``, all taken from the write itself."""
+        obs = Observation()
+        written = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.collect_set("_bucket").alias("buckets"),
+            *[c.alias(name) for name, c in tallies.items()],
+        ).drop(_STATUS)
         rel = f"s{len(self.commits)}-{uuid.uuid4().hex[:8]}"
-        out = os.path.join(self.path, "data", rel)
-        b.write.mode("overwrite").parquet(out)
-        # one read-back job yields both the touched-bucket list and the
-        # row count (the Iceberg summary's added-records twin)
-        stats = (
-            self.spark.read.parquet(out).groupBy("_bucket").count().collect()
-        )
-        buckets = sorted(r._bucket for r in stats)
-        return rel, buckets, sum(r["count"] for r in stats)
+        written.write.mode("overwrite").parquet(os.path.join(self.path, "data", rel))
+        got = obs.get
+        got["buckets"] = sorted(got["buckets"])
+        return rel, written.schema.jsonValue(), got
 
-    def _commit(self, op: str, rel: str | None, buckets, tag, meta=None) -> int:
+    def _commit(self, op: str, rel: str | None, buckets, tag, meta=None, schema=None) -> int:
         cid = len(self.commits)
         self.commits.append(
-            Commit(id=cid, op=op, dir=rel, buckets=buckets, tag=tag, meta=meta or {})
+            Commit(id=cid, op=op, dir=rel, buckets=buckets, tag=tag, meta=meta or {}, schema=schema)
         )
         self._flush()
         return cid
 
     # -- writes ------------------------------------------------------------
-    def append(self, df: DataFrame, tag: str | None = None, meta: dict | None = None) -> int:
-        rel, buckets, n = self._write_dir(df)
+    def _put(self, op: str, df: DataFrame, tag: str | None, meta: dict | None) -> int:
+        rel, schema, got = self._write_dir(self._bucketed(df).repartition("_bucket"))
         m = dict(meta or {})
-        m.setdefault("inserted", n)
+        m.setdefault("inserted", got["rows"])
         m.setdefault("updated", 0)
-        return self._commit("append", rel, buckets, tag, m)
+        buckets = got["buckets"] if op == "append" else None
+        return self._commit(op, rel, buckets, tag, m, schema)
+
+    def append(self, df: DataFrame, tag: str | None = None, meta: dict | None = None) -> int:
+        return self._put("append", df, tag, meta)
 
     def overwrite(self, df: DataFrame, tag: str | None = None, meta: dict | None = None) -> int:
-        rel, _, n = self._write_dir(df)
-        m = dict(meta or {})
-        m.setdefault("inserted", n)
-        m.setdefault("updated", 0)
-        return self._commit("overwrite", rel, None, tag, m)
+        return self._put("overwrite", df, tag, meta)
 
     def merge(
         self,
@@ -147,70 +179,46 @@ class SnapshotTable:
     ) -> int:
         """MERGE INTO: null-safe match on ``on``; matched target rows get
         ``update_cols`` overwritten from source; unmatched source rows are
-        inserted (when ``insert``). Rewrites only the buckets the source
-        touches (plus, for bucketless tables, the whole table)."""
-        target = self.read()
-        cols = target.columns
-        src = source.select(*cols)
-
+        inserted (when ``insert``). Commits only the buckets the source
+        touches; a bucketless table is one bucket. The table's
+        ``bucket_col`` must be one of ``on``, so matching rows share a
+        bucket."""
         bc = self.props.get("bucket_col")
-        if bc is not None and target.head(1):
-            src_bucketed = self._bucketed(src)
-            touched = sorted(
-                r._bucket for r in src_bucketed.select("_bucket").distinct().collect()
-            )
-            tgt_bucketed = self._bucketed(target)
-            scope = tgt_bucketed.filter(F.col("_bucket").isin(touched)).drop("_bucket")
-        else:
-            touched = None
-            scope = target
-
-        cond = [scope[k].eqNullSafe(src[k]) for k in on]
-        joined = scope.alias("t").join(src.alias("s"), cond, "full_outer").persist()
-
-        matched = F.col(f"t.{on[0]}").isNotNull() & F.col(f"s.{on[0]}").isNotNull()
-        t_only = F.col(f"s.{on[0]}").isNull()
-        s_only = F.col(f"t.{on[0]}").isNull()
+        if bc is not None and bc not in on:
+            raise ValueError(f"merge keys {on} must include the bucket column {bc!r}")
+        target = self._scan()
+        cols = [c for c in target.columns if c != "_bucket"]
+        src = self._bucketed(source.select(*cols)).withColumn(_SIDE, F.lit(1).cast("byte"))
+        both = target.withColumn(_SIDE, F.lit(0).cast("byte")).unionByName(src)
         # update_cols: None = update every column on match; [] = update none
         # (insert-only MERGE, K1 semantics, storage.py:227-246)
         upd = set(cols if update_cols is None else update_cols)
-        out_cols = []
-        for c in cols:
-            tc, sc = F.col(f"t.{c}"), F.col(f"s.{c}")
-            merged_val = (
-                F.when(matched, sc if c in upd else tc)
-                .when(t_only, tc)
-                .otherwise(sc)  # source-only -> insert
-            )
-            out_cols.append(merged_val.alias(c))
-        result = joined.select(*out_cols)
-        if not insert:
-            keys = scope.select(*on)
-            result = result.join(keys, on, "left_semi")
-
-        # insert/update tally — the Iceberg snapshot summary's twin
-        # (surfaced by last_commit_tally). One small agg over the
-        # already-persisted scoped join; matched rows only count as
-        # updates when a WHEN MATCHED clause exists (upd non-empty),
-        # mirroring MERGE semantics.
-        counts = joined.agg(
-            F.sum(matched.cast("long")).alias("m"),
-            F.sum(s_only.cast("long")).alias("i"),
-        ).first()
-        n_updated = int(counts["m"] or 0) if upd else 0
-        n_inserted = int(counts["i"] or 0) if insert else 0
-
-        rel, buckets, _ = self._write_dir(result)
-        joined.unpersist()
-        return self._commit(
-            "merge", rel, touched if touched is not None else None, tag,
-            {"inserted": n_inserted, "updated": n_updated},
+        out_schema = StructType(
+            [f for f in both.schema.fields if f.name != _SIDE] + [StructField(_STATUS, ByteType())]
         )
+
+        merged = both.repartition("_bucket").mapInArrow(
+            partial(_merge_batches, on=on, upd=upd, insert=insert), out_schema
+        )
+        status = F.col(_STATUS)
+        rel, schema, got = self._write_dir(
+            merged,
+            matched=F.sum((status == _MATCHED).cast("long")),
+            inserted=F.sum((status == _INSERTED).cast("long")),
+        )
+        # matched rows only count as updates when a WHEN MATCHED clause
+        # exists (upd non-empty), mirroring MERGE semantics — the Iceberg
+        # snapshot summary's twin, surfaced by last_commit_tally
+        tally = {
+            "inserted": int(got["inserted"] or 0),
+            "updated": int(got["matched"] or 0) if upd else 0,
+        }
+        return self._commit("merge", rel, got["buckets"], tag, tally, schema)
 
     def last_commit_tally(self) -> tuple[int, int]:
         """(inserted, updated) of the latest data commit — interface
         parity with ``IcebergTable.last_commit_tally``. The emulation's
-        counts are EXACT (computed from the merge join itself); the
+        counts are EXACT (observed on the rows the MERGE writes); the
         Iceberg backend's updated count is a copy-on-write file-level
         upper bound (see iceberg.py)."""
         for c in reversed(self.commits):
@@ -302,20 +310,24 @@ class SnapshotTable:
                 f"snapshot {snapshot_id} expired (oldest retained: {min_id}); "
                 f"expire_snapshots removed its data files"
             )
-        live = self._live_dirs(snapshot_id)
-        dfs = []
-        for rel, (mode, buckets) in live.items():
-            df = self.spark.read.parquet(os.path.join(self.path, "data", rel))
+        return self._scan(snapshot_id).drop("_bucket")
+
+    def _scan(self, snapshot_id: int | None = None) -> DataFrame:
+        """The live rows at ``snapshot_id`` with their stored ``_bucket``."""
+        schemas = {c.dir: c.schema for c in self.commits if c.dir is not None}
+        out = None
+        for rel, (mode, buckets) in self._live_dirs(snapshot_id).items():
+            reader = self.spark.read
+            if schemas.get(rel) is not None:
+                reader = reader.schema(StructType.fromJson(schemas[rel]))
+            df = reader.parquet(os.path.join(self.path, "data", rel))
             if mode == "include":
                 df = df.filter(F.col("_bucket").isin(sorted(buckets)))
             elif buckets:  # exclude mode with superseded buckets
                 df = df.filter(~F.col("_bucket").isin(sorted(buckets)))
-            dfs.append(df.drop("_bucket"))
-        if not dfs:
+            out = df if out is None else out.unionByName(df)
+        if out is None:
             raise ValueError("empty table read requires a schema; append first")
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
         return out
 
     def is_empty(self) -> bool:
@@ -329,3 +341,55 @@ class SnapshotTable:
 
     def snapshot_ids(self) -> list[int]:
         return [c.id for c in self.commits]
+
+
+def _merge_batches(batches, on: list[str], upd: set[str], insert: bool):
+    """One partition of a MERGE: the side-marked union of target and
+    source rows in, the partition's committed rows out (with their
+    status). Target rows of buckets no source row touches are dropped;
+    the rest join the source rows on ``on`` as a null-safe full outer
+    join (a left join without ``insert``). Values move by Arrow ``take``
+    from the row each output column reads, so types stay exact."""
+    import pandas as pd
+    import pyarrow as pa
+
+    batches = list(batches)
+    if not batches:
+        return
+    tab = pa.Table.from_batches(batches).combine_chunks()
+    is_src = tab[_SIDE].to_numpy() == 1
+    bucket = tab["_bucket"].to_numpy()
+    t_pos = np.flatnonzero(~is_src & np.isin(bucket, np.unique(bucket[is_src])))
+    s_pos = np.flatnonzero(is_src)
+    codes = _key_codes(tab.select(on).take(np.concatenate([t_pos, s_pos])))
+    j = pd.DataFrame({"k": codes[: len(t_pos)], "t": t_pos}).merge(
+        pd.DataFrame({"k": codes[len(t_pos):], "s": s_pos}),
+        on="k",
+        how="outer" if insert else "left",
+    )
+    ti = j["t"].fillna(-1).to_numpy(np.int64)
+    si = j["s"].fillna(-1).to_numpy(np.int64)
+    status = np.where(ti < 0, _INSERTED, np.where(si < 0, _TARGET_ONLY, _MATCHED))
+    keep = np.where(ti >= 0, ti, si)  # the target's value unless inserted
+    take_src = np.where(si >= 0, si, ti)  # the source's value when matched
+    names = [n for n in tab.column_names if n != _SIDE]
+    out = pa.Table.from_arrays(
+        [tab[n].take(take_src if n in upd else keep) for n in names]
+        + [pa.array(status.astype(np.int8))],
+        names=names + [_STATUS],
+    )
+    yield from out.to_batches()
+
+
+def _key_codes(keys) -> np.ndarray:
+    """One int64 per row of the Arrow table ``keys``, equal exactly when
+    the rows' keys are equal, with NULL equal to NULL."""
+    import pyarrow.compute as pc
+
+    codes = np.zeros(keys.num_rows, np.int64)
+    for col in keys.columns:
+        enc = pc.dictionary_encode(col, null_encoding="encode").combine_chunks()
+        idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        # re-densify so the next column's radix cannot overflow
+        codes = np.unique(codes * len(enc.dictionary) + idx, return_inverse=True)[1]
+    return codes.astype(np.int64)

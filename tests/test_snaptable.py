@@ -147,3 +147,125 @@ def test_expire_snapshots(spark, tmp_path):
     t2 = SnapshotTable(spark, t.path)
     with _pytest.raises(KeyError, match="expired"):
         t2.read(tag="s2")
+
+
+@pytest.mark.parametrize("bucket_col", [None, "k2"])
+@pytest.mark.parametrize("insert", [True, False])
+def test_merge_null_key_matched(spark, tmp_path, bucket_col, insert):
+    """Matching is null-safe end to end: a NULL key part matches NULL, so
+    the row updates (it is neither kept stale, counted as an insert, nor
+    dropped by the update-only form)."""
+    t = SnapshotTable.create(spark, str(tmp_path / "nk"), bucket_col=bucket_col, n_buckets=4)
+    schema = "k1 string, k2 string, v long"
+    t.append(spark.createDataFrame([(None, "a", 0), ("x", "b", 0), ("y", "c", 0)], schema))
+    src = spark.createDataFrame([(None, "a", 1), ("x", "b", 5), ("z", "d", 7)], schema)
+    t.merge(src, on=["k1", "k2"], update_cols=["v"], insert=insert)
+    want = [("x", "b", 5), ("y", "c", 0), (None, "a", 1)] + ([("z", "d", 7)] if insert else [])
+    assert sorted(map(tuple, t.read().collect()), key=str) == sorted(want, key=str)
+    assert t.last_commit_tally() == ((1 if insert else 0), 2)
+
+
+def test_merge_keys_must_include_bucket_col(spark, tmp_path):
+    """A MERGE joins within buckets, so keys that leave out the bucket
+    column could match rows across buckets: it is refused."""
+    t = SnapshotTable.create(spark, str(tmp_path / "bk"), bucket_col="host", n_buckets=4)
+    t.append(spark.createDataFrame([("h.edu", "u", 0)], ["host", "url", "n"]))
+    with pytest.raises(ValueError, match="bucket column"):
+        t.merge(spark.createDataFrame([("h.edu", "u", 1)], ["host", "url", "n"]), on=["url"])
+
+
+def test_merge_type_round_trip(spark, tmp_path):
+    """Matched, target-only and inserted rows read back bit-exact: longs
+    above 2**53 and nullable int/boolean columns never pass through
+    float64. The table is bucketless, so every row goes through the
+    merge (none is served from the old dir)."""
+    big = 2**53 + 1
+    schema = "id bigint, big bigint, n int, flag boolean, s string"
+    t = SnapshotTable.create(spark, str(tmp_path / "types"))
+    t.append(spark.createDataFrame(
+        [(1, big, 1, True, "t1"), (2, None, None, None, None), (3, -big, 3, False, "t3")], schema
+    ))
+    src = spark.createDataFrame(
+        [(1, big + 4, None, None, "s1"), (3, big + 6, 30, True, None), (big, big + 8, None, False, "s4")],
+        schema,
+    )
+    t.merge(src, on=["id"], update_cols=["big", "n", "flag", "s"], insert=True)
+    got = {r.id: tuple(r) for r in t.read().collect()}
+    assert got == {
+        1: (1, big + 4, None, None, "s1"),  # matched: source values, nulls included
+        2: (2, None, None, None, None),  # target-only
+        3: (3, big + 6, 30, True, None),  # matched
+        big: (big, big + 8, None, False, "s4"),  # inserted
+    }
+    assert t.last_commit_tally() == (1, 2)
+    assert t.read().dtypes == [
+        ("id", "bigint"), ("big", "bigint"), ("n", "int"), ("flag", "boolean"), ("s", "string")
+    ]
+
+
+def test_write_path_job_counts(spark, tmp_path):
+    """Each write is one pass and a read infers no schema. With AQE off a
+    job is an action: a MERGE, an append and a read are one job each, a
+    round commit two (AQE on, the same calls measured 2, 2 and 4 jobs)."""
+    from course_scraper_spark.storage.crawl_state import CrawlStateStore
+
+    sc = spark.sparkContext
+
+    def mk(n, off):
+        return spark.range(off, off + n).select(
+            F.concat(F.lit("h"), (F.col("id") % 50).cast("string"), F.lit(".edu")).alias("host"),
+            F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+            F.lit(1).cast("long").alias("n"),
+        )
+
+    t = SnapshotTable.create(spark, str(tmp_path / "jobs"), bucket_col="host", n_buckets=32)
+    t.append(mk(1500, 0))
+    store = CrawlStateStore(spark, str(tmp_path / "state"))
+    store.save_round(0, mk(300, 0).select("host", "url"), mk(300, 300).select("host", "url"), {"s": 0})
+    calls = {
+        "merge": lambda: t.merge(mk(1500, 750), on=["host", "url"], update_cols=["n"]),
+        "append": lambda: t.append(mk(300, 5000)),
+        "read": lambda: t.read().collect(),
+        "save_round": lambda: store.save_round(
+            1, mk(300, 600).select("host", "url"), mk(300, 900).select("host", "url"), {"s": 1}
+        ),
+    }
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    jobs = {}
+    try:
+        for name, call in calls.items():
+            sc.setJobGroup(f"write-path-{name}", name)
+            call()
+            sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)  # the status store lags the jobs
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"write-path-{name}"))
+    finally:
+        sc.setJobGroup(None, None)
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+    assert jobs == {"merge": 1, "append": 1, "read": 1, "save_round": 2}
+    assert t.last_commit_tally() == (300, 0)
+    assert t.read().count() == 1500 + 750 + 300
+
+
+def test_schema_recorded_per_commit(spark, tmp_path):
+    """Each commit records its dir's schema: an overwrite may change it,
+    time travel reads the old one, and a log written before schemas were
+    recorded falls back to inference."""
+    import json
+    import os
+
+    t = SnapshotTable.create(spark, str(tmp_path / "sch"), bucket_col="host", n_buckets=4)
+    old = t.overwrite(spark.createDataFrame([("a.edu", "u1")], ["host", "url"]))
+    t.overwrite(spark.createDataFrame([("a.edu", "u2", True)], ["host", "url", "is_mc"]))
+    assert t.read(snapshot_id=old).columns == ["host", "url"]
+    assert [tuple(r) for r in t.read().collect()] == [("a.edu", "u2", True)]
+
+    with open(os.path.join(t.path, "snapshots.json")) as f:
+        log = json.load(f)
+    for c in log["commits"]:
+        c.pop("schema", None)
+    with open(os.path.join(t.path, "snapshots.json"), "w") as f:
+        json.dump(log, f)
+    legacy = SnapshotTable(spark, t.path)
+    assert [tuple(r) for r in legacy.read().collect()] == [("a.edu", "u2", True)]
+    assert [tuple(r) for r in legacy.read(snapshot_id=old).collect()] == [("a.edu", "u1")]

@@ -26,8 +26,14 @@ sys.path.insert(0, REPO)
 
 
 def count_jobs(sc) -> int:
-    """Total jobs the driver has launched so far (all job groups)."""
-    return len(sc.statusTracker().getJobIdsForGroup(None))
+    """Total jobs the driver has launched so far (all job groups): the
+    latest job id plus one. Job ids are sequential per SparkContext, so
+    the difference of two counts is exact however few jobs the status
+    store retains (``spark.ui.retainedJobs``)."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    jobs = jsc.statusStore().jobsList(None)  # newest first
+    return jobs.head().jobId() + 1 if jobs.nonEmpty() else 0
 
 
 def main() -> None:
