@@ -5,7 +5,6 @@ single-process asyncio crawler (EPRIweber/course-scraper):
 
 * URL frontier + BFS wave scheduler  -> :mod:`course_scraper_spark.operators.frontier`
 * per-host politeness scheduling      -> :mod:`course_scraper_spark.operators.politeness`
-* co-partitioned URL-seen store      -> :mod:`course_scraper_spark.operators.seen_store`
 * JSON-CSS span extraction            -> :mod:`course_scraper_spark.operators.spans`
 * course merge / upsert semantics     -> :mod:`course_scraper_spark.operators.merge`
 * dedup / similarity / text analysis  -> :mod:`course_scraper_spark.operators.dedup`,

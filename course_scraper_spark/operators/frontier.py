@@ -258,14 +258,6 @@ def fetch_ok_col() -> F.Column:
 # shares the code path, so the guard is enforced (tests/test_plan_audit.py).
 BROADCAST_WAVE_THRESHOLD = 1_000_000
 
-# 'auto' co-partitioned seen store kicks in above this many seen rows:
-# below it, per-wave delta repartition + chained joins cost more fixed
-# overhead than the seen reshuffle they avoid (measured +1.5-2.5 s/wave
-# at a 1.1k-URL world); above it, the per-wave reshuffle of the growing
-# seen side dominates and the store wins. The big-world scaling bench
-# (tools/scaling_bench.py, >=100k URLs) crosses it; the toy bench does
-# not.
-COPARTITION_SEEN_THRESHOLD = 50_000
 # Frontier-growth estimate that routes a round's seq ranking onto the
 # two-phase range path (ranking.assign_seq_lazy) BEFORE the new-URL
 # count is known. The ranked set is the new URLs after the anti-join and
@@ -378,7 +370,7 @@ class _Budget:
         )
         return True
 
-    def readmissions(self, queue_cand: DataFrame, seen: DataFrame, store, deepest: int):
+    def readmissions(self, queue_cand: DataFrame, seen: DataFrame, deepest: int):
         """(rows, count): seen URLs rediscovered via a SHALLOWER parent
         re-enter the frontier at the improved depth, keeping their seq,
         so their subtree is re-expanded instead of cut at the depth
@@ -391,21 +383,11 @@ class _Budget:
         step is skipped — always so when each round is one BFS depth."""
         if self.shallowest + 1 >= deepest:
             return None, 0
-        improvements = self.improvements
-        if store is not None:
-            # candidate-scoped lookup: semi_rows pulls only the seen rows
-            # this round's candidates touch, with no exchange on the
-            # delta sides (a plain join reshuffles all of seen)
-            qkeys = queue_cand.select("source_id", "url").dropDuplicates().persist()
-            seen = store.semi_rows(qkeys, list(SEEN_SCHEMA.names)).persist()
-            self._cached += [qkeys, seen]
-            if improvements is not None:
-                improvements = improvements.join(qkeys, ["source_id", "url"], "left_semi")
         known = seen.filter(F.col("visited") & F.col("depth").isNotNull()).select(
             "source_id", "url", "depth"
         )
-        if improvements is not None:
-            known = known.unionByName(improvements)
+        if self.improvements is not None:
+            known = known.unionByName(self.improvements)
         known_min = known.groupBy("source_id", "url").agg(F.min("depth").alias("known_depth"))
         redisc = (
             queue_cand.join(seen.select("source_id", "url"), ["source_id", "url"], "left_semi")
@@ -452,8 +434,6 @@ def crawl_sources(
     fetch: str = "join",
     transport_factory=None,
     fetch_kwargs: dict | None = None,
-    copartition_seen: bool | str = "auto",
-    seen_store_factory=None,
 ) -> CrawlResult:
     """Run the full BFS to fixpoint for every source in one round loop.
 
@@ -473,12 +453,8 @@ def crawl_sources(
     delta; ``resume=True`` continues from the last committed wave.
     ``max_waves`` stops early after N waves.
 
-    ``copartition_seen``: route the seen anti-join through the
-    co-partitioned delta store (operators/seen_store.py). ``'auto'``
-    switches on above ``COPARTITION_SEEN_THRESHOLD`` seen rows, ``True``
-    from wave 0, ``False`` never; results are identical either way.
-    ``seen_store_factory`` returns the store to use then, e.g.
-    ``lambda: TableSeenStore(spark, table)`` for a durable seen table.
+    The seen set is the root checkpoint plus each wave's checkpointed
+    delta; with a state store, its ``url_seen`` table is the durable copy.
 
     ``metrics_store`` records per-host fetch counts per wave;
     ``salt_hosts_threshold`` spreads hosts holding more than this many
@@ -491,7 +467,6 @@ def crawl_sources(
         broadcast_wave_threshold=broadcast_wave_threshold, state_store=state_store,
         resume=resume, metrics_store=metrics_store, run_id=run_id, fetch=fetch,
         transport_factory=transport_factory, fetch_kwargs=fetch_kwargs,
-        copartition_seen=copartition_seen, seen_store_factory=seen_store_factory,
     )
 
 
@@ -521,8 +496,6 @@ def crawl_sources_budgeted(
     fetch_kwargs: dict | None = None,
     readmit_min_depth: bool = True,
     schedule_log: list | None = None,
-    copartition_seen: bool | str = "auto",
-    seen_store_factory=None,
 ) -> CrawlResult:
     """Priority-frontier crawl with per-host politeness budgets.
 
@@ -557,15 +530,13 @@ def crawl_sources_budgeted(
         broadcast_wave_threshold=broadcast_wave_threshold, state_store=state_store,
         resume=resume, metrics_store=metrics_store, run_id=run_id, fetch=fetch,
         transport_factory=transport_factory, fetch_kwargs=fetch_kwargs,
-        copartition_seen=copartition_seen, seen_store_factory=seen_store_factory,
     )
 
 
 def _crawl(spark: SparkSession, sources: list[SourceConfig], pages: DataFrame,
            budget: _Budget | None, *, make_root_filter, max_rounds, salt_hosts_threshold,
            broadcast_wave_threshold, state_store, resume, metrics_store, run_id, fetch,
-           transport_factory, fetch_kwargs, copartition_seen, seen_store_factory
-           ) -> CrawlResult:
+           transport_factory, fetch_kwargs) -> CrawlResult:
     """The round loop of both entry points: pending → fetch set (all of
     it, or the budget's share) → fetch → links → scope filter → MC
     previews → depth gate → seen anti-join → first-occurrence dedup →
@@ -598,30 +569,13 @@ def _crawl(spark: SparkSession, sources: list[SourceConfig], pages: DataFrame,
             .select(*_FRONTIER_COLS)
         )
 
-    # co-partitioned seen store (operators/seen_store.py): each delta is
-    # hash-partitioned ONCE on the anti-join keys, so the growing seen
-    # side never reshuffles; 'auto' engages it past
-    # COPARTITION_SEEN_THRESHOLD seen rows
-    store = None
-
-    def make_store():
-        if seen_store_factory is not None:
-            return seen_store_factory()
-        from .seen_store import PartitionedSeenStore
-
-        return PartitionedSeenStore(spark, ("source_id", "url"), n_partitions=parts)
-
     resumed = state_store.latest_round() if (state_store is not None and resume) else None
     if resumed is not None:
         rounds, seq_base, snap = resumed
         seen = state_store.read_seen(snap)
         pending = state_store.read_pending(rounds)
         n_pending = pending.count()
-        row = seen.agg(F.count(F.lit(1)).alias("n"), F.max("depth").alias("d")).first()
-        seen_rows, deepest = row["n"], row["d"] or 0
-        if copartition_seen is True:
-            store = make_store()
-            seen = store.add_delta(seen)
+        deepest = seen.agg(F.max("depth")).first()[0] or 0
     else:
         rounds = 0
         roots = spark.createDataFrame(
@@ -630,28 +584,20 @@ def _crawl(spark: SparkSession, sources: list[SourceConfig], pages: DataFrame,
         ).withColumn("visited", F.lit(True))
         if budget is not None:
             roots = budget.allowed(roots)
-        if copartition_seen is True:
-            store = make_store()
-            seen = store.add_delta(roots)
-        else:
-            seen = roots.localCheckpoint(eager=True)
+        seen = roots.localCheckpoint(eager=True)
         pending = next_pending(seen)
         if budget is not None and budget.disallow:
             n_pending = pending.count()
         else:
             n_pending = sum(1 for d in max_depth.values() if d > 0)
         seq_base = {rt.source.source_id: 1 for rt in runtimes}
-        seen_rows, deepest = len(runtimes), 0
+        deepest = 0
         if state_store is not None:
             # round 0 = the root set: without it, a resume would replay
             # only the per-round deltas and lose the roots from seen
             state_store.save_round(0, seen, pending, seq_base)
-    if store is not None:
-        seen = store.union()
 
     def unseen(df: DataFrame) -> DataFrame:
-        if store is not None:
-            return store.anti_join(df)
         return df.join(seen.select("source_id", "url"), ["source_id", "url"], "left_anti")
 
     while n_pending and (max_rounds is None or rounds < max_rounds):
@@ -799,22 +745,13 @@ def _crawl(spark: SparkSession, sources: list[SourceConfig], pages: DataFrame,
 
         readmit, n_readmit = None, 0
         if budget is not None and budget.readmit:
-            readmit, n_readmit = budget.readmissions(queue_cand, seen, store, deepest)
+            readmit, n_readmit = budget.readmissions(queue_cand, seen, deepest)
 
-        if store is None and copartition_seen == "auto" and seen_rows > COPARTITION_SEEN_THRESHOLD:
-            # seed the store with the accumulated seen: one repartition,
-            # once; later deltas chain with no reshuffle of seen
-            store = make_store()
-            store.add_delta(seen)
-        # the round's single materialization: the store's partitioned
-        # checkpoint, or a LAZY one whose first action is the totals
-        # collect below — one job materializes the delta AND counts it
-        if store is not None:
-            delta = store.add_delta(delta)
-            seen = store.union()
-        else:
-            delta = delta.localCheckpoint(eager=False)
-            seen = seen.unionByName(delta)
+        # the round's single materialization: a LAZY checkpoint whose
+        # first action is the totals collect below — one job materializes
+        # the delta AND counts it
+        delta = delta.localCheckpoint(eager=False)
+        seen = seen.unionByName(delta)
         n_new = n_fetchable = 0
         totals = delta.filter(F.col("visited")).groupBy("source_id", "depth").agg(
             F.count(F.lit(1)).alias("n"))
@@ -824,7 +761,6 @@ def _crawl(spark: SparkSession, sources: list[SourceConfig], pages: DataFrame,
             if r["depth"] < max_depth[r["source_id"]]:
                 n_fetchable += r["n"]
             deepest = max(deepest, r["depth"])
-        seen_rows += n_new
 
         if budget is None:
             pending, n_pending = next_pending(delta), n_fetchable

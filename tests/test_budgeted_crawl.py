@@ -188,30 +188,11 @@ def test_politeness_spacing_mixed_delay_carryover(spark):
     assert min(fast_gaps) >= delays["fast.edu"] - 1e-9
 
 
-def test_budgeted_copartitioned_seen_equality(spark, sources, pages, robots):
-    """Forcing the co-partitioned seen store in the budgeted loop must
-    reproduce the default path's final seen set exactly."""
-    base = crawl_sources_budgeted(
-        spark, sources, pages, robots=robots, round_budget_s=8.0, copartition_seen=False
-    )
-    stored = crawl_sources_budgeted(
-        spark, sources, pages, robots=robots, round_budget_s=8.0, copartition_seen=True
-    )
-    canon = lambda r: sorted(
-        (x.source_id, x.url, x.depth, x.seq, x.visited)
-        for x in r.seen.select("source_id", "url", "depth", "seq", "visited").collect()
-    )
-    assert canon(stored) == canon(base)
-
-
 def test_compose_all_features_equality(spark, tmp_path):
-    """Round-5 cross-feature interaction gate: seen store FORCED ON +
-    salting + fused HTTP fetch + in-band metrics + cadence carry-over +
-    min-depth re-admission, all SIMULTANEOUSLY, must still reproduce the
-    unbudgeted BFS seen set exactly (features were previously only
-    pairwise-tested; the AQE-checkpoint gotcha was exactly the kind of
-    cross-feature bug this catches). A 100k-world variant runs in
-    tools/compose_check.py for the scaling evidence."""
+    """Cross-feature interaction gate: salting + fused HTTP fetch +
+    in-band metrics + cadence carry-over + min-depth re-admission, all
+    SIMULTANEOUSLY, must still reproduce the unbudgeted BFS seen set
+    exactly (features were previously only pairwise-tested)."""
     from course_scraper_spark.operators.fetch import NO_SLEEP, world_transport_factory
     from course_scraper_spark.operators.metrics import MetricsStore
     from course_scraper_spark.synth.world import WorldSpec, build_pages, build_sources
@@ -222,7 +203,7 @@ def test_compose_all_features_equality(spark, tmp_path):
     hosts = [(s.root_url.split("/")[2], 1.0) for s in sources]
     robots = spark.createDataFrame(hosts, "host string, crawl_delay double")
 
-    oracle = crawl_sources(spark, sources, pages, copartition_seen=False)
+    oracle = crawl_sources(spark, sources, pages)
 
     mstore = MetricsStore(spark, str(tmp_path / "compose_metrics"))
     composed = crawl_sources_budgeted(
@@ -231,7 +212,6 @@ def test_compose_all_features_equality(spark, tmp_path):
         pages,
         robots=robots,
         round_budget_s=4.0,
-        copartition_seen=True,               # store forced on from round 0
         salt_hosts_threshold=10,             # salting engages on every host
         fetch="http",                        # fused ladder + in-band stats
         transport_factory=world_transport_factory(pages),

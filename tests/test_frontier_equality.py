@@ -56,18 +56,3 @@ def test_failed_fetches_stay_in_seen(crawl_result, sources, store):
             any_failed = True
             assert set(oracle.failed) <= set(crawl_result.seen_urls(s.source_id))
     assert any_failed, "fixture should exercise the fetch-failure path"
-
-
-def test_copartitioned_seen_store_equality(spark, sources, pages):
-    """Forcing the co-partitioned seen store from wave 0 must reproduce
-    the default path exactly — seen set, depths, seqs, previews (the
-    anti-join chain over partitioned deltas == anti-join vs the union)."""
-    from course_scraper_spark.operators.frontier import crawl_sources
-
-    base = crawl_sources(spark, sources, pages, copartition_seen=False)
-    stored = crawl_sources(spark, sources, pages, copartition_seen=True)
-    canon = lambda r: sorted(
-        (x.source_id, x.url, x.depth, x.seq, x.visited)
-        for x in r.seen.select("source_id", "url", "depth", "seq", "visited").collect()
-    )
-    assert canon(stored) == canon(base)

@@ -105,81 +105,3 @@ def test_fused_fetch_is_single_python_stage(spark, spec, pages):
         .mapInPandas(_extract_links, _LINKS_SCHEMA)
     )
     assert audit.plan_string(two_step, "simple").count("MapInPandas") == 2
-
-
-def test_seen_store_anti_join_single_exchange(spark):
-    """The co-partitioned seen store's contract: however many deltas the
-    seen set spans, the per-wave anti-join exchanges ONLY the candidate
-    side — the checkpointed deltas' hash partitioning satisfies the
-    join's required distribution (zero Exchange, zero Sort on the seen
-    side), with AQE enabled for the join itself."""
-    from course_scraper_spark.operators.seen_store import PartitionedSeenStore
-
-    prev_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ (the at-scale shape)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    try:
-        store = PartitionedSeenStore(spark, ("source_id", "url"), n_partitions=8)
-        for k in range(3):
-            store.add_delta(
-                spark.range(k * 1000, (k + 1) * 1000).select(
-                    F.concat(F.lit("s"), (F.col("id") % 3).cast("string")).alias("source_id"),
-                    F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
-                )
-            )
-        cand = spark.range(500).select(
-            F.concat(F.lit("s"), (F.col("id") % 3).cast("string")).alias("source_id"),
-            F.concat(F.lit("u"), (F.col("id") * 7).cast("string")).alias("url"),
-        )
-        out = store.anti_join(cand)
-        n = out.count()  # finalize the adaptive plan
-        plan = audit.plan_string(out, "simple")
-        assert plan.count("Exchange hashpartitioning") == 1, plan
-        assert plan.count("SortMergeJoin") == 3, plan
-        # correctness: chain == anti-join against the union
-        want = cand.join(store.union().select("source_id", "url"), ["source_id", "url"], "left_anti")
-        assert n == want.count()
-        assert sorted(map(tuple, out.collect())) == sorted(map(tuple, want.collect()))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bcast)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-
-
-def test_seen_store_semi_rows_no_delta_exchange(spark):
-    """The store's lookup primitive (re-admission overlay): per-delta
-    left-semi joins keep the delta sides exchange-free — only the
-    candidate keys move — and the result equals a plain semi-join
-    against the union."""
-    from course_scraper_spark.operators.seen_store import PartitionedSeenStore
-
-    prev_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        store = PartitionedSeenStore(spark, ("source_id", "url"), n_partitions=8)
-        for k in range(3):
-            store.add_delta(
-                spark.range(k * 1000, (k + 1) * 1000).select(
-                    F.concat(F.lit("s"), (F.col("id") % 3).cast("string")).alias("source_id"),
-                    F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
-                    (F.col("id") % 7).cast("int").alias("depth"),
-                )
-            )
-        keys = spark.range(300).select(
-            F.concat(F.lit("s"), (F.col("id") % 3).cast("string")).alias("source_id"),
-            F.concat(F.lit("u"), (F.col("id") * 5).cast("string")).alias("url"),
-        ).localCheckpoint(eager=True)
-        got = store.semi_rows(keys, ["source_id", "url", "depth"])
-        got.count()
-        plan = audit.plan_string(got, "simple")
-        # one exchange per delta for the KEY side only; the three delta
-        # legs contribute none (their checkpointed partitioning holds)
-        n_joins = plan.count("SortMergeJoin")
-        n_exch = plan.count("Exchange hashpartitioning")
-        assert n_joins == 3 and n_exch <= 3, plan
-        want = store.union().select("source_id", "url", "depth").join(
-            keys, ["source_id", "url"], "left_semi"
-        )
-        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bcast)

@@ -206,7 +206,9 @@ def test_merge_type_round_trip(spark, tmp_path):
 def test_write_path_job_counts(spark, tmp_path):
     """Each write is one pass and a read infers no schema. With AQE off a
     job is an action: a MERGE, an append and a read are one job each, a
-    round commit two (AQE on, the same calls measured 2, 2 and 4 jobs)."""
+    round commit two (AQE on, the same calls measured 2, 2 and 4 jobs).
+    Reading back a seen set of 20 committed rounds is one job too: the
+    read does not grow with the number of round dirs."""
     from course_scraper_spark.storage.crawl_state import CrawlStateStore
 
     sc = spark.sparkContext
@@ -222,6 +224,11 @@ def test_write_path_job_counts(spark, tmp_path):
     t.append(mk(1500, 0))
     store = CrawlStateStore(spark, str(tmp_path / "state"))
     store.save_round(0, mk(300, 0).select("host", "url"), mk(300, 300).select("host", "url"), {"s": 0})
+    long = CrawlStateStore(spark, str(tmp_path / "long"))
+    for rnd in range(20):
+        long.save_round(
+            rnd, mk(20, 20 * rnd).select("host", "url"), mk(5, 9000 + rnd).select("host", "url"), {"s": rnd}
+        )
     calls = {
         "merge": lambda: t.merge(mk(1500, 750), on=["host", "url"], update_cols=["n"]),
         "append": lambda: t.append(mk(300, 5000)),
@@ -229,6 +236,7 @@ def test_write_path_job_counts(spark, tmp_path):
         "save_round": lambda: store.save_round(
             1, mk(300, 600).select("host", "url"), mk(300, 900).select("host", "url"), {"s": 1}
         ),
+        "read_seen_20_rounds": lambda: long.read_seen().count(),
     }
     old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -242,7 +250,8 @@ def test_write_path_job_counts(spark, tmp_path):
     finally:
         sc.setJobGroup(None, None)
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-    assert jobs == {"merge": 1, "append": 1, "read": 1, "save_round": 2}
+    assert jobs == {"merge": 1, "append": 1, "read": 1, "save_round": 2, "read_seen_20_rounds": 1}
+    assert long.latest_round()[0] == 19 and long.read_seen().count() == 400
     assert t.last_commit_tally() == (300, 0)
     assert t.read().count() == 1500 + 750 + 300
 

@@ -42,7 +42,6 @@ def main() -> None:
     ap.add_argument("--pages", type=int, default=20_000)
     ap.add_argument("--cpus", type=int, default=8)
     ap.add_argument("--fetch", default="join", choices=["join", "http"])
-    ap.add_argument("--store", default="auto", help="copartition_seen: auto|true|false")
     args = ap.parse_args()
 
     from course_scraper_spark.session import get_spark
@@ -73,8 +72,7 @@ def main() -> None:
     pages = spark.createDataFrame(build_pages(spec)).repartition(args.cpus).cache()
     pages.count()
 
-    store = {"auto": "auto", "true": True, "false": False}[args.store]
-    kw: dict = dict(copartition_seen=store)
+    kw: dict = {}
     if args.fetch == "http":
         from course_scraper_spark.operators.fetch import NO_SLEEP
         from course_scraper_spark.synth.transport import spec_transport_factory
@@ -103,7 +101,6 @@ def main() -> None:
             {
                 "loop": args.loop,
                 "fetch": args.fetch,
-                "store": args.store,
                 "pages": args.pages,
                 "cpus": args.cpus,
                 "rounds": rounds,

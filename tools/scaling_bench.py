@@ -61,8 +61,7 @@ HTTP_PAGES = 1_200_000
 HTTP_HOSTS = 600
 # overridable: the loop stage is latency-dominated at 20k (per-wave fixed
 # cost); SPARK_GRAFT_LOOP_PAGES=100000 reproduces the amortization
-# evidence (r3: eff 0.29@20k -> 0.48@100k) and crosses the
-# COPARTITION_SEEN_THRESHOLD so the co-partitioned seen store engages
+# evidence (r3: eff 0.29@20k -> 0.48@100k)
 LOOP_PAGES = int(os.environ.get("SPARK_GRAFT_LOOP_PAGES", "20000"))
 LOOP_HOSTS = max(40, LOOP_PAGES // 500)
 
