@@ -21,10 +21,11 @@ in whole-stage codegen.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Iterator
 
 import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -124,6 +125,18 @@ class ScrapeOutput:
     docs: DataFrame      # source_id, doc_id, spans — BASELINE shape
     courses: DataFrame   # exploded course records
     url_flags: DataFrame  # source_id, url, is_target (storage.py:248-276)
+    # the persisted parse all three derive from, and the schemas broadcast
+    # its UDF reads
+    parsed: DataFrame = field(repr=False)
+    schemas_bc: Broadcast = field(repr=False)
+
+    def release(self) -> None:
+        """Drop the parse cache and the executors' copies of the schemas
+        broadcast. The outputs stay valid: a later action re-runs the parse.
+        The broadcast is unpersisted, not destroyed: a re-run that read a
+        destroyed broadcast would fail."""
+        self.parsed.unpersist()
+        self.schemas_bc.unpersist()
 
 
 def scrape_targets(
@@ -186,6 +199,7 @@ def scrape_targets(
     # paid the parse twice, measured ~2x the stage in the bench loop).
     # Callers that consume a single output pay one extra cache write;
     # the parse output is slim (spans + records, no html).
+    # ScrapeOutput.release() drops it once the outputs are written.
     parsed = fetched.mapInPandas(_make_parser(schemas_bc), _PARSE_SCHEMA).persist()
 
     docs = parsed.filter(F.col("n_items") > 0).select("source_id", "doc_id", "spans")
@@ -209,4 +223,5 @@ def scrape_targets(
     )
     url_flags = good.unionByName(bad)
 
-    return ScrapeOutput(docs=docs, courses=courses, url_flags=url_flags)
+    return ScrapeOutput(docs=docs, courses=courses, url_flags=url_flags,
+                        parsed=parsed, schemas_bc=schemas_bc)

@@ -109,6 +109,7 @@ def run_pipeline(
 
         # K2: is_target flags
         update_url_targets(urls_table, scrape.url_flags)
+        scrape.release()
         metrics.log(
             run_id,
             "*",

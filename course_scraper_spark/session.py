@@ -7,6 +7,15 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
 * Arrow on (every Python UDF in this engine is a pandas/Arrow UDF)
 * shuffle partitions sized by caller (waves are small early, huge late —
   AQE coalesces the small case, explicit repartition handles the huge one)
+* a codegen cache big enough for a whole crawl pass (~240 classes)
+* ``local[...]`` only: Python workers fork from ``course_scraper_spark.pyworker``
+  and talk to the JVM over Unix-domain sockets in ``/tmp``. Each cuts the
+  fixed cost of every Python UDF task (see that module). Not set on a
+  cluster: a package shipped by ``--py-files`` reaches a worker's path per
+  task, after the daemon has started, and a daemon that cannot start fails
+  every UDF. A cluster whose executors have the package installed can set
+  the same three ``spark.python.*`` settings through ``extra_conf`` or
+  ``spark-defaults.conf``.
 """
 
 from __future__ import annotations
@@ -58,7 +67,18 @@ def get_spark(
         # Keep the UI off in the sandbox; a real cluster would leave it on.
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # the default 100 entries is fewer than one crawl pass compiles, so
+        # every later pass or round recompiled all of them
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
+    if master.startswith("local"):
+        builder = (
+            builder.config("spark.python.daemon.module", "course_scraper_spark.pyworker")
+            .config("spark.python.unix.domain.socket.enabled", "true")
+            # Spark defaults the socket dir to java.io.tmpdir; a long one
+            # overflows the ~108-byte AF_UNIX path limit
+            .config("spark.python.unix.domain.socket.dir", "/tmp")
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -94,3 +94,28 @@ def test_docs_from_documents_pandas_equality(spark):
     a = docs_from_documents(documents).orderBy("doc_id").collect()
     b = docs_from_documents_pandas(documents).orderBy("doc_id").collect()
     assert a == b
+
+
+def test_release_keeps_cache_flat(spark, pages, schemas_pdf, oracle_results, tmp_path):
+    """scrape -> write -> release, three times: the session's persisted RDD
+    count stays flat, and a released output still recomputes."""
+    from course_scraper_spark.storage.snaptable import SnapshotTable
+
+    targets = spark.createDataFrame(
+        [(sid, u) for sid, (seen, _) in oracle_results.items() for u in seen], ["source_id", "url"]
+    )
+    schemas = spark.createDataFrame(schemas_pdf)
+    pages.count()  # the session-wide page cache counts once it is built
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    for i in range(3):
+        out = scrape_targets(targets, pages, schemas)
+        docs = SnapshotTable.create(spark, str(tmp_path / f"docs{i}"), bucket_col="doc_id", n_buckets=4)
+        docs.append(out.docs)
+        SnapshotTable.create(spark, str(tmp_path / f"courses{i}")).append(out.courses)
+        SnapshotTable.create(spark, str(tmp_path / f"flags{i}")).append(out.url_flags)
+        out.release()
+        assert persistent().size() == before, i
+    n_docs = docs.read().count()
+    assert n_docs > 0
+    assert out.docs.count() == n_docs

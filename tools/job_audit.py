@@ -49,7 +49,8 @@ def main() -> None:
         crawl_sources,
         crawl_sources_budgeted,
     )
-    from course_scraper_spark.synth.world import WorldSpec, build_pages, build_sources
+    from course_scraper_spark.synth.spark_world import build_pages_spark
+    from course_scraper_spark.synth.world import WorldSpec, build_sources
 
     spark = get_spark(
         app_name=f"job-audit-{args.loop}",
@@ -69,7 +70,9 @@ def main() -> None:
     sources = build_sources(spec)
     for s in sources:
         s.crawl_depth = max(s.crawl_depth, 10)
-    pages = spark.createDataFrame(build_pages(spec)).repartition(args.cpus).cache()
+    # generated on the executors: a driver-side list ships as one task
+    # that grows with --pages (18.6 MB at 100,000)
+    pages = build_pages_spark(spark, spec, partitions=args.cpus).cache()
     pages.count()
 
     kw: dict = {}
