@@ -178,50 +178,52 @@ def main():
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = get_spark(app_name="bench")
 
-    crawl = crawl_extract_bench(spark)
+    try:
+        crawl = crawl_extract_bench(spark)
 
-    # n=3 runs per query, report the MEDIAN: sub-second queries at sf0.1
-    # are noise-limited on this shared host (BASELINE.md documents 43-77s
-    # drift between identical jobs), so single-shot timings made the
-    # round-over-round comparison mostly noise. Run 1 is cold (shared
-    # shingle cache fills, files page in), runs 2-3 are steady-state —
-    # the median reports steady-state; all runs are kept for the judge.
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    qs = entrymod.queries()
-    timings, runs = {}, {}
-    for name in BENCH_QUERIES:
-        rs = []
-        for _ in range(n_runs):
-            t0 = time.time()
-            qs[name](spark, sf_dir).count()
-            rs.append(round(time.time() - t0, 3))
-        runs[name] = rs
-        timings[name] = sorted(rs)[len(rs) // 2]
-    total_q = round(sum(timings.values()), 2)
+        # n=3 runs per query, report the MEDIAN: sub-second queries at sf0.1
+        # are noise-limited on this shared host (BASELINE.md documents 43-77s
+        # drift between identical jobs), so single-shot timings made the
+        # round-over-round comparison mostly noise. Run 1 is cold (shared
+        # shingle cache fills, files page in), runs 2-3 are steady-state —
+        # the median reports steady-state; all runs are kept for the judge.
+        n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+        qs = entrymod.queries()
+        timings, runs = {}, {}
+        for name in BENCH_QUERIES:
+            rs = []
+            for _ in range(n_runs):
+                t0 = time.time()
+                qs[name](spark, sf_dir).count()
+                rs.append(round(time.time() - t0, 3))
+            runs[name] = rs
+            timings[name] = sorted(rs)[len(rs) // 2]
+        total_q = round(sum(timings.values()), 2)
 
-    entrymod.shingle_cache_clear()
+        entrymod.shingle_cache_clear()
 
-    # 10x corpus for the scale-path dedup/similarity suite (skippable:
-    # SPARK_GRAFT_LARGE_WORLD=0); reported alongside, never part of the
-    # headline `value` (round-over-round comparability)
-    large = None
-    if os.environ.get("SPARK_GRAFT_LARGE_WORLD", "1") != "0":
-        large = large_world_bench(spark, sf_dir)
+        # 10x corpus for the scale-path dedup/similarity suite (skippable:
+        # SPARK_GRAFT_LARGE_WORLD=0); reported alongside, never part of the
+        # headline `value` (round-over-round comparability)
+        large = None
+        if os.environ.get("SPARK_GRAFT_LARGE_WORLD", "1") != "0":
+            large = large_world_bench(spark, sf_dir)
 
-    out = {
-        "metric": "crawl_extract_store_plus_queries_wall",
-        "value": round(crawl["wall_sec"] + total_q, 2),
-        "unit": "sec",
-        "queries": timings,
-        "query_agg": f"median_of_{n_runs}",
-        "query_runs": runs,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "crawl": crawl,
-    }
-    if large is not None:
-        out["large_world"] = large
-    print(json.dumps(out))
-    spark.stop()
+        out = {
+            "metric": "crawl_extract_store_plus_queries_wall",
+            "value": round(crawl["wall_sec"] + total_q, 2),
+            "unit": "sec",
+            "queries": timings,
+            "query_agg": f"median_of_{n_runs}",
+            "query_runs": runs,
+            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+            "crawl": crawl,
+        }
+        if large is not None:
+            out["large_world"] = large
+        print(json.dumps(out))
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

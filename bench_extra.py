@@ -33,6 +33,13 @@ def main():
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name=f"bench-extra-{mode}")
+    try:
+        run(spark, mode, sf_dir)
+    finally:
+        spark.stop()
+
+
+def run(spark, mode: str, sf_dir: str) -> None:
     qs = entrymod.queries()
 
     if mode == "plans":
@@ -49,7 +56,6 @@ def main():
             with open(path, "w") as f:
                 f.write(plan)
             print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
-        spark.stop()
         return
 
     if mode in ("time", "noop"):
@@ -71,7 +77,6 @@ def main():
             print(f"{name}: median {out[name]['median']}s runs {rs}", flush=True)
         print(json.dumps({k: v["median"] for k, v in out.items()}))
         entrymod.shingle_cache_clear()
-        spark.stop()
         return
 
     if mode == "large":
@@ -85,7 +90,6 @@ def main():
             res["timings"] = {k: v for k, v in res["timings"].items() if k in names}
             res["runs"] = {k: v for k, v in res["runs"].items() if k in names}
         print(json.dumps(res))
-        spark.stop()
         return
 
     raise SystemExit(f"unknown mode {mode!r}")

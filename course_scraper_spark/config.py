@@ -18,6 +18,8 @@ from typing import Optional
 from pyspark.sql import SparkSession, DataFrame
 from pyspark.sql import types as T
 
+from .session import local_frame
+
 SOURCE_SCHEMA = T.StructType(
     [
         T.StructField("source_id", T.StringType(), False),
@@ -86,4 +88,4 @@ def load_sources_yaml(path: str) -> list[SourceConfig]:
 
 def sources_df(spark: SparkSession, sources: list[SourceConfig]) -> DataFrame:
     """Seed list as a tiny dimension DataFrame (broadcast everywhere)."""
-    return spark.createDataFrame([s.to_row() for s in sources], SOURCE_SCHEMA)
+    return local_frame(spark, [tuple(s.to_row().values()) for s in sources], SOURCE_SCHEMA)

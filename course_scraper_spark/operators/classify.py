@@ -30,6 +30,8 @@ import zlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def flatten_taxonomy(tree: dict, parent: str | None = None, depth: int = 0) -> list[tuple]:
     """[(taxonomy_id, parent_id, depth)] — driver recursion; the tree is
@@ -45,8 +47,8 @@ def flatten_taxonomy(tree: dict, parent: str | None = None, depth: int = 0) -> l
 
 
 def taxonomy_df(spark, tree: dict) -> DataFrame:
-    return spark.createDataFrame(
-        flatten_taxonomy(tree), "taxonomy_id string, parent_id string, depth int"
+    return local_frame(
+        spark, flatten_taxonomy(tree), "taxonomy_id string, parent_id string, depth int"
     )
 
 

@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _tokens(col):
     return F.filter(F.split(F.lower(F.trim(col)), r"\s+"), lambda t: t != "")
@@ -801,7 +803,7 @@ def connected_components_star(
     )
     spark = pairs.sparkSession
     if not edges.head(1):
-        return spark.createDataFrame([], f"node {node_type}, comp {node_type}")
+        return local_frame(spark, [], f"node {node_type}, comp {node_type}")
     for _ in range(max_iter):
         # -- large-star over symmetric neighborhoods
         sym = edges.unionByName(
@@ -868,7 +870,7 @@ def _cc_union_find(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     rows = [(n, find(n)) for n in sorted(nodes)]
-    return pairs.sparkSession.createDataFrame(rows, f"node {node_type}, comp {node_type}")
+    return local_frame(pairs.sparkSession, rows, f"node {node_type}, comp {node_type}")
 
 
 def dup_clusters(

@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 MAX_RETRIES = 5          # render_utils.py ladder: 1 try + 5 retries
 BASE_BACKOFF_S = 1.0     # 1 -> 2 -> 4 -> 8 -> 16 s doubling
 USER_AGENT = "course-scraper-spark/0.3 (+crawl; respectful)"
@@ -390,7 +392,7 @@ def http_root_probe(spark, root_urls: list[str], transport_factory) -> DataFrame
     only (url, status_code, is_mc) booleans, mirroring
     ``frontier._root_probe``'s projection discipline. Connection errors
     surface as status 599 (≥400 ⇒ failed source)."""
-    df = spark.createDataFrame([(u,) for u in root_urls], "url string")
+    df = local_frame(spark, [(u,) for u in root_urls], "url string")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         transport = transport_factory()

@@ -50,6 +50,7 @@ from pyspark.sql import types as T
 from ..config import SourceConfig
 from ..functions import urls as U
 from ..functions.htmlmini import extract_hrefs, extract_mc_listing_hrefs
+from ..session import local_frame
 from . import fetch as http_fetch
 from . import politeness
 from .ranking import assign_seq_lazy
@@ -234,7 +235,8 @@ def _dim_df(spark: SparkSession, runtimes: list[SourceRuntime]) -> DataFrame:
         )
         for rt in runtimes
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "source_id string, is_mc boolean, scope_domain string, root_path string, "
         "include_external boolean, excl_regex string, max_depth int",
@@ -549,7 +551,7 @@ def _crawl(spark: SparkSession, sources: list[SourceConfig], pages: DataFrame,
         runtimes, failed = resolve_sources_transport(spark, sources, transport_factory)
     else:
         runtimes, failed = resolve_sources(spark, sources, pages)
-    result = CrawlResult(seen=spark.createDataFrame([], SEEN_SCHEMA), failed_sources=failed)
+    result = CrawlResult(seen=local_frame(spark, [], SEEN_SCHEMA), failed_sources=failed)
     if not runtimes:
         return result
     dim = F.broadcast(_dim_df(spark, runtimes))
@@ -578,7 +580,8 @@ def _crawl(spark: SparkSession, sources: list[SourceConfig], pages: DataFrame,
         deepest = seen.agg(F.max("depth")).first()[0] or 0
     else:
         rounds = 0
-        roots = spark.createDataFrame(
+        roots = local_frame(
+            spark,
             [(rt.source.source_id, rt.source.root_url, rt.scope_domain, 0, 1) for rt in runtimes],
             "source_id string, url string, host string, depth int, seq long",
         ).withColumn("visited", F.lit(True))
@@ -701,7 +704,7 @@ def _crawl(spark: SparkSession, sources: list[SourceConfig], pages: DataFrame,
                         F.lit(None).cast("long").alias("seq"), F.lit(False).alias("visited"))
             )
         else:
-            previews = spark.createDataFrame([], SEEN_SCHEMA)
+            previews = local_frame(spark, [], SEEN_SCHEMA)
 
         # queue candidates: generic = every anchor; MC = listing links to
         # content.php. Row-level depth gate, which differs per branch
@@ -733,7 +736,7 @@ def _crawl(spark: SparkSession, sources: list[SourceConfig], pages: DataFrame,
         ranked = assign_seq_lazy(first, "source_id", ["parent_seq", "link_pos"], seq_col="rel_seq",
                                  est_rows=n_now * EST_WAVE_BRANCHING, num_partitions=parts)
         base_df = F.broadcast(
-            spark.createDataFrame(sorted(seq_base.items()), "source_id string, base long")
+            local_frame(spark, sorted(seq_base.items()), "source_id string, base long")
         )
         # LEFT join + coalesce: a source missing from a resumed seq_base
         # must not silently lose its URLs

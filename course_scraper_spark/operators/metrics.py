@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..storage.snaptable import SnapshotTable
 from .frontier import fetch_ok_col
 
@@ -42,8 +43,8 @@ class MetricsStore:
         self.spark = spark
 
     def log(self, run_id: str, source_id: str, stage: str, msg: str) -> None:
-        df = self.spark.createDataFrame(
-            [(run_id, source_id, stage, msg)], "run_id string, source_id string, stage string, msg string"
+        df = local_frame(
+            self.spark, [(run_id, source_id, stage, msg)], "run_id string, source_id string, stage string, msg string"
         ).withColumn("ts", F.current_timestamp())
         self.run_log.append(df)
 

@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_ref", T.StringType(), False),
@@ -459,7 +461,7 @@ def synth_audio_table(spark, n: int = 20, sample_rate: int = 8000) -> DataFrame:
                 out["duration_s"].append(float(len(samples)) / sample_rate)
             yield pd.DataFrame(out)
 
-    return spark.createDataFrame([(r,) for r in refs], "media_ref string").mapInPandas(
+    return local_frame(spark, [(r,) for r in refs], "media_ref string").mapInPandas(
         gen, MEDIA_SCHEMA
     )
 
@@ -616,7 +618,7 @@ def synth_video_table(spark, n: int = 12, fps: int = 10) -> DataFrame:
                 out["duration_s"].append(nf / fps)
             yield pd.DataFrame(out)
 
-    return spark.createDataFrame([(r,) for r in refs], "media_ref string").mapInPandas(
+    return local_frame(spark, [(r,) for r in refs], "media_ref string").mapInPandas(
         gen, MEDIA_SCHEMA
     )
 

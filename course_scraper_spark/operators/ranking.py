@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def assign_seq(
     df: DataFrame,
@@ -138,7 +140,10 @@ def _two_phase_rank(
             run += cnt
         totals[g] = run
     spark = df.sparkSession
-    off_df = spark.createDataFrame(offsets, [group_col, "_pid", "_offset"]) if offsets else None
+    # _pid int: spark_partition_id()'s type, so the join needs no cast
+    group_type = ranged.schema[group_col].dataType.simpleString()
+    off_schema = f"`{group_col}` {group_type}, _pid int, _offset long"
+    off_df = local_frame(spark, offsets, off_schema) if offsets else None
 
     local_w = Window.partitionBy("_pid", group_col).orderBy(*[F.col(c) for c in order_cols])
     ranked = ranged.withColumn("_local_rn", F.row_number().over(local_w))

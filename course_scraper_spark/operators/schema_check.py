@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import SourceConfig
+from ..session import local_frame
 from .spans import scrape_targets
 
 REQUIRED_FIELDS = ("course_title", "course_description")
@@ -28,7 +29,8 @@ def validate_schemas(
 ) -> DataFrame:
     """(source_id, n_records, n_good, valid) per source — valid iff the
     schema_url page yields ≥1 record with all required fields truthy."""
-    targets = spark.createDataFrame(
+    targets = local_frame(
+        spark,
         [(s.source_id, s.schema_url) for s in sources if s.schema_url],
         "source_id string, url string",
     )
@@ -40,8 +42,8 @@ def validate_schemas(
         F.count(F.lit(1)).alias("n_records"),
         F.sum(F.when(good, 1).otherwise(0)).alias("n_good"),
     )
-    all_sources = spark.createDataFrame(
-        [(s.source_id,) for s in sources if s.schema_url], "source_id string"
+    all_sources = local_frame(
+        spark, [(s.source_id,) for s in sources if s.schema_url], "source_id string"
     )
     return (
         all_sources.join(per_source, "source_id", "left")

@@ -28,6 +28,7 @@ from .operators.frontier import CrawlResult, crawl_sources
 from .operators.merge import MergeStats, merge_courses, save_urls, update_url_targets, with_merge_keys, create_courses_table
 from .operators.metrics import MetricsStore
 from .operators.spans import ScrapeOutput, scrape_targets
+from .session import local_frame
 from .storage.crawl_state import CrawlStateStore
 from .storage.runlock import RunLock
 from .storage.snaptable import SnapshotTable
@@ -63,7 +64,7 @@ def run_pipeline(
         courses_table = create_courses_table(spark, os.path.join(workdir, "courses"))
         if not courses_table.is_empty():
             done = courses_table.read().select("source_id").distinct()
-            src_df = spark.createDataFrame([(s.source_id,) for s in sources], ["source_id"])
+            src_df = local_frame(spark, [(s.source_id,) for s in sources], "source_id string")
             todo = {r.source_id for r in src_df.join(done, "source_id", "left_anti").collect()}
             sources = [s for s in sources if s.source_id in todo]
         metrics.log(run_id, "*", "PLAN", f"{len(sources)} sources to process")

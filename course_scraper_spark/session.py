@@ -10,19 +10,30 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
 * a codegen cache big enough for a whole crawl pass (~240 classes)
 * ``local[...]`` only: Python workers fork from ``course_scraper_spark.pyworker``
   and talk to the JVM over Unix-domain sockets in ``/tmp``. Each cuts the
-  fixed cost of every Python UDF task (see that module). Not set on a
+  fixed cost of every Python UDF task (see that module). The workers get
+  the package's parent directory on ``PYTHONPATH``, so they import it
+  whatever the driver's working directory. Not set on a
   cluster: a package shipped by ``--py-files`` reaches a worker's path per
   task, after the daemon has started, and a daemon that cannot start fails
   every UDF. A cluster whose executors have the package installed can set
   the same three ``spark.python.*`` settings through ``extra_conf`` or
   ``spark-defaults.conf``.
+
+:func:`local_frame` builds every DataFrame the engine makes from driver
+rows.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import DataType, StructType
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -78,7 +89,27 @@ def get_spark(
             # Spark defaults the socket dir to java.io.tmpdir; a long one
             # overflows the ~108-byte AF_UNIX path limit
             .config("spark.python.unix.domain.socket.dir", "/tmp")
+            # workers import this package whatever the driver's cwd
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in ``schema`` order),
+    ``schema`` a DDL string or StructType.
+
+    Built from an Arrow table, it stays in the plan as a ``LocalRelation``
+    and never runs Python. ``createDataFrame(<list>)`` instead ships
+    pickled rows through a Python RDD, whose workers come from a second
+    daemon with its own pool (the RDD worker key differs from the SQL
+    UDFs'). Nulls in a non-nullable field raise ``ValueError``."""
+    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    cols = list(zip(*rows)) or [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=to_arrow_type(f.dataType)) for c, f in zip(cols, struct.fields)],
+        names=struct.names,
+    )
+    return spark.createDataFrame(table, struct)

@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 from .world import (
     WorldSpec,
     _h,
@@ -42,8 +44,8 @@ PAGES_SCHEMA = T.StructType(
 
 def build_pages_spark(spark: SparkSession, spec: WorldSpec, partitions: int | None = None) -> DataFrame:
     sizes = spec.host_sizes()
-    dim = spark.createDataFrame(
-        [(k, sizes[k]) for k in range(spec.n_hosts)], "k int, n_pages int"
+    dim = local_frame(
+        spark, [(k, sizes[k]) for k in range(spec.n_hosts)], "k int, n_pages int"
     )
     idx = dim.select("k", "n_pages", F.explode(F.sequence(F.lit(0), F.col("n_pages") - 1)).alias("i"))
     parts = partitions or spark.sparkContext.defaultParallelism
@@ -96,8 +98,8 @@ def build_urls_spark(
     fetch UDF, so worlds 10-100x bigger than the parquet one are cheap
     (no multi-GB html materialization anywhere)."""
     sizes = spec.host_sizes()
-    dim = spark.createDataFrame(
-        [(k, sizes[k]) for k in range(spec.n_hosts)], "k int, n_pages int"
+    dim = local_frame(
+        spark, [(k, sizes[k]) for k in range(spec.n_hosts)], "k int, n_pages int"
     )
     idx = dim.select(
         "k", "n_pages", F.explode(F.sequence(F.lit(0), F.col("n_pages") - 1)).alias("i")

@@ -95,3 +95,37 @@ def test_long_tmpdir_session_runs_udf(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "rows 3" in proc.stdout
+
+
+def test_workers_import_package_from_any_cwd(tmp_path):
+    """A driver that puts the repo on its own ``sys.path`` only, started
+    from another directory with ``PYTHONPATH`` unset: local sessions give
+    the workers the package's parent dir, so the daemon and a UDF that
+    imports the package both start."""
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from course_scraper_spark.session import get_spark
+
+        def udf(it):
+            from course_scraper_spark.functions import urls
+            for pdf in it:
+                yield pdf.assign(mod=urls.__name__)
+
+        spark = get_spark(master="local[1]", shuffle_partitions=1)
+        try:
+            df = spark.range(2, numPartitions=1)
+            print("mods", sorted({{r.mod for r in df.mapInPandas(udf, "id long, mod string").collect()}}))
+        finally:
+            spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "mods ['course_scraper_spark.functions.urls']" in proc.stdout

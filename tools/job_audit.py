@@ -57,64 +57,66 @@ def main() -> None:
         master=f"local[{args.cpus}]",
         shuffle_partitions=args.cpus,
     )
-    sc = spark.sparkContext
+    try:
+        sc = spark.sparkContext
 
-    spec = WorldSpec(
-        n_hosts=max(40, args.pages // 500),
-        total_pages=args.pages,
-        branching=8,
-        extra_links=4,
-        filler_paras=2,
-        max_courses=3,
-    )
-    sources = build_sources(spec)
-    for s in sources:
-        s.crawl_depth = max(s.crawl_depth, 10)
-    # generated on the executors: a driver-side list ships as one task
-    # that grows with --pages (18.6 MB at 100,000)
-    pages = build_pages_spark(spark, spec, partitions=args.cpus).cache()
-    pages.count()
-
-    kw: dict = {}
-    if args.fetch == "http":
-        from course_scraper_spark.operators.fetch import NO_SLEEP
-        from course_scraper_spark.synth.transport import spec_transport_factory
-
-        kw.update(
-            fetch="http",
-            transport_factory=spec_transport_factory(spec),
-            fetch_kwargs={"sleep_fn": NO_SLEEP},
+        spec = WorldSpec(
+            n_hosts=max(40, args.pages // 500),
+            total_pages=args.pages,
+            branching=8,
+            extra_links=4,
+            filler_paras=2,
+            max_courses=3,
         )
+        sources = build_sources(spec)
+        for s in sources:
+            s.crawl_depth = max(s.crawl_depth, 10)
+        # generated on the executors: a driver-side list ships as one task
+        # that grows with --pages (18.6 MB at 100,000)
+        pages = build_pages_spark(spark, spec, partitions=args.cpus).cache()
+        pages.count()
 
-    j0, t0 = count_jobs(sc), time.time()
-    if args.loop == "bfs":
-        res = crawl_sources(spark, sources, pages, **kw)
-        rounds = len(res.metrics)
-    else:
-        res = crawl_sources_budgeted(
-            spark, sources, pages, round_budget_s=1e9, **kw
-        )
-        rounds = len(res.metrics)
-    n_seen = res.seen.count()
-    wall = time.time() - t0
-    jobs = count_jobs(sc) - j0 - 1  # exclude the final seen count
+        kw: dict = {}
+        if args.fetch == "http":
+            from course_scraper_spark.operators.fetch import NO_SLEEP
+            from course_scraper_spark.synth.transport import spec_transport_factory
 
-    print(
-        json.dumps(
-            {
-                "loop": args.loop,
-                "fetch": args.fetch,
-                "pages": args.pages,
-                "cpus": args.cpus,
-                "rounds": rounds,
-                "jobs_total": jobs,
-                "jobs_per_round": round(jobs / max(1, rounds), 2),
-                "seen": n_seen,
-                "wall_sec": round(wall, 2),
-            }
+            kw.update(
+                fetch="http",
+                transport_factory=spec_transport_factory(spec),
+                fetch_kwargs={"sleep_fn": NO_SLEEP},
+            )
+
+        j0, t0 = count_jobs(sc), time.time()
+        if args.loop == "bfs":
+            res = crawl_sources(spark, sources, pages, **kw)
+            rounds = len(res.metrics)
+        else:
+            res = crawl_sources_budgeted(
+                spark, sources, pages, round_budget_s=1e9, **kw
+            )
+            rounds = len(res.metrics)
+        n_seen = res.seen.count()
+        wall = time.time() - t0
+        jobs = count_jobs(sc) - j0 - 1  # exclude the final seen count
+
+        print(
+            json.dumps(
+                {
+                    "loop": args.loop,
+                    "fetch": args.fetch,
+                    "pages": args.pages,
+                    "cpus": args.cpus,
+                    "rounds": rounds,
+                    "jobs_total": jobs,
+                    "jobs_per_round": round(jobs / max(1, rounds), 2),
+                    "seen": n_seen,
+                    "wall_sec": round(wall, 2),
+                }
+            )
         )
-    )
-    spark.stop()
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

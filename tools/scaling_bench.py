@@ -112,116 +112,118 @@ def worker(cpus: int, stage: str) -> None:
         extra_conf={"spark.sql.files.maxPartitionBytes": "2m"},
     )
 
-    if stage == "parse":
-        spec = _heavy_spec(PARSE_PAGES, PARSE_HOSTS)
-        world_path = f"/tmp/scaling_world_{PARSE_PAGES}_{PARSE_HOSTS}_v2.parquet"
-        if not os.path.exists(world_path):
-            # many small files: parse parallelism follows scan splits,
-            # so the store must carry enough of them for 4N cores
-            build_pages_spark(spark, spec, partitions=128).write.mode("overwrite").parquet(world_path)
-        pages_df = spark.read.parquet(world_path)
-        sources, schemas = _sources_and_schemas(spark, spec)
-        host_dim = F.broadcast(
-            spark.createDataFrame(
-                [(s.source_id, s.root_url.split("/")[2]) for s in sources],
-                "source_id string, host string",
+    try:
+        if stage == "parse":
+            spec = _heavy_spec(PARSE_PAGES, PARSE_HOSTS)
+            world_path = f"/tmp/scaling_world_{PARSE_PAGES}_{PARSE_HOSTS}_v2.parquet"
+            if not os.path.exists(world_path):
+                # many small files: parse parallelism follows scan splits,
+                # so the store must carry enough of them for 4N cores
+                build_pages_spark(spark, spec, partitions=128).write.mode("overwrite").parquet(world_path)
+            pages_df = spark.read.parquet(world_path)
+            sources, schemas = _sources_and_schemas(spark, spec)
+            host_dim = F.broadcast(
+                spark.createDataFrame(
+                    [(s.source_id, s.root_url.split("/")[2]) for s in sources],
+                    "source_id string, host string",
+                )
             )
-        )
-        targets = (
-            pages_df.select("url", "host").join(host_dim, "host").select("source_id", "url").cache()
-        )
-        n_targets = targets.count()  # materialized outside the timed section
+            targets = (
+                pages_df.select("url", "host").join(host_dim, "host").select("source_id", "url").cache()
+            )
+            n_targets = targets.count()  # materialized outside the timed section
 
-        t0 = time.time()
-        # broadcast path (460k targets ≈ 40 MB — far under the driver
-        # bound). A/B measured: forcing the shuffle path here cost
-        # 159s/123s at 4/16 cores (eff 0.33) vs 103s/33s broadcast —
-        # shuffling the html corpus loses outright; the broadcast's
-        # serial build is the lesser cost at any feasible target count.
-        out = scrape_targets(targets, pages_df, schemas, n_targets=n_targets)
-        n_docs = out.docs.count()
-        wall = time.time() - t0
-        print(json.dumps({"cpus": cpus, "stage": stage, "wall": wall, "targets": n_targets,
-                          "docs": n_docs, "throughput": n_targets / wall}))
-    elif stage == "http_fetch":
-        from course_scraper_spark.operators.fetch import NO_SLEEP, fetch_extract_http
-        from course_scraper_spark.synth.spark_world import build_urls_spark
-        from course_scraper_spark.synth.transport import spec_transport_factory
+            t0 = time.time()
+            # broadcast path (460k targets ≈ 40 MB — far under the driver
+            # bound). A/B measured: forcing the shuffle path here cost
+            # 159s/123s at 4/16 cores (eff 0.33) vs 103s/33s broadcast —
+            # shuffling the html corpus loses outright; the broadcast's
+            # serial build is the lesser cost at any feasible target count.
+            out = scrape_targets(targets, pages_df, schemas, n_targets=n_targets)
+            n_docs = out.docs.count()
+            wall = time.time() - t0
+            print(json.dumps({"cpus": cpus, "stage": stage, "wall": wall, "targets": n_targets,
+                              "docs": n_docs, "throughput": n_targets / wall}))
+        elif stage == "http_fetch":
+            from course_scraper_spark.operators.fetch import NO_SLEEP, fetch_extract_http
+            from course_scraper_spark.synth.spark_world import build_urls_spark
+            from course_scraper_spark.synth.transport import spec_transport_factory
 
-        # 4x the parse world: the fused stage runs ~6x faster per page
-        # than the parse stage, so the same 300k world left only ~40s of
-        # parallel work against ~3s of fixed scheduling cost (measured
-        # eff 0.72 from that ratio alone). SpecTransport regenerates
-        # pages executor-side, so only the URL list scales — no parquet.
-        spec = _heavy_spec(HTTP_PAGES, HTTP_HOSTS)
-        wave = (
-            build_urls_spark(spark, spec, partitions=cpus * 4)
-            .withColumn("source_id", F.lit("s"))
-            .withColumn("seq", F.monotonically_increasing_id())
-            .withColumn("depth", F.lit(0))
-            .repartition(cpus * 4)
-            .cache()
-        )
-        n_urls = wave.count()
-        t0 = time.time()
-        # FUSED ladder+extract: page html never crosses the Arrow
-        # boundary. The two-step fetch_http -> extract chain measured
-        # eff 0.32 at 2->8 cores — GC/serialization-bound on the html
-        # column, not CPU-bound — while the fused form is the ladder's
-        # real CPU profile (and the production shape for the crawl loop).
-        links = fetch_extract_http(wave, spec_transport_factory(spec), sleep_fn=NO_SLEEP)
-        n_links = links.count()
-        wall = time.time() - t0
-        print(json.dumps({"cpus": cpus, "stage": stage, "wall": wall, "urls": n_urls,
-                          "links": n_links, "throughput": n_urls / wall}))
-    elif stage == "loop_http":
-        # FULL crawl-extract-store loop on the PRODUCTION fetch path:
-        # the BFS loop drives the fused HTTP ladder (SpecTransport
-        # regenerates pages executor-side — no pages broadcast; the
-        # join path's per-wave driver-serial broadcast build is a
-        # synthetic-harness artifact the code itself documents), then
-        # the parse stage extracts spans from the parquet page store.
-        # This is the shape a real cluster runs, so its N->4N number is
-        # the loop-level scaling evidence the north rule asks for.
-        from course_scraper_spark.operators.fetch import NO_SLEEP
-        from course_scraper_spark.synth.transport import spec_transport_factory
+            # 4x the parse world: the fused stage runs ~6x faster per page
+            # than the parse stage, so the same 300k world left only ~40s of
+            # parallel work against ~3s of fixed scheduling cost (measured
+            # eff 0.72 from that ratio alone). SpecTransport regenerates
+            # pages executor-side, so only the URL list scales — no parquet.
+            spec = _heavy_spec(HTTP_PAGES, HTTP_HOSTS)
+            wave = (
+                build_urls_spark(spark, spec, partitions=cpus * 4)
+                .withColumn("source_id", F.lit("s"))
+                .withColumn("seq", F.monotonically_increasing_id())
+                .withColumn("depth", F.lit(0))
+                .repartition(cpus * 4)
+                .cache()
+            )
+            n_urls = wave.count()
+            t0 = time.time()
+            # FUSED ladder+extract: page html never crosses the Arrow
+            # boundary. The two-step fetch_http -> extract chain measured
+            # eff 0.32 at 2->8 cores — GC/serialization-bound on the html
+            # column, not CPU-bound — while the fused form is the ladder's
+            # real CPU profile (and the production shape for the crawl loop).
+            links = fetch_extract_http(wave, spec_transport_factory(spec), sleep_fn=NO_SLEEP)
+            n_links = links.count()
+            wall = time.time() - t0
+            print(json.dumps({"cpus": cpus, "stage": stage, "wall": wall, "urls": n_urls,
+                              "links": n_links, "throughput": n_urls / wall}))
+        elif stage == "loop_http":
+            # FULL crawl-extract-store loop on the PRODUCTION fetch path:
+            # the BFS loop drives the fused HTTP ladder (SpecTransport
+            # regenerates pages executor-side — no pages broadcast; the
+            # join path's per-wave driver-serial broadcast build is a
+            # synthetic-harness artifact the code itself documents), then
+            # the parse stage extracts spans from the parquet page store.
+            # This is the shape a real cluster runs, so its N->4N number is
+            # the loop-level scaling evidence the north rule asks for.
+            from course_scraper_spark.operators.fetch import NO_SLEEP
+            from course_scraper_spark.synth.transport import spec_transport_factory
 
-        spec = _heavy_spec(LOOP_PAGES, LOOP_HOSTS)
-        world_path = f"/tmp/scaling_world_loop_{LOOP_PAGES}_{LOOP_HOSTS}.parquet"
-        if not os.path.exists(world_path):
-            build_pages_spark(spark, spec, partitions=128).write.mode("overwrite").parquet(world_path)
-        pages_df = spark.read.parquet(world_path)
-        sources, schemas = _sources_and_schemas(spark, spec)
-        t0 = time.time()
-        res = crawl_sources(
-            spark, sources, pages_df,
-            fetch="http", transport_factory=spec_transport_factory(spec),
-            fetch_kwargs={"sleep_fn": NO_SLEEP},
-        )
-        seen = res.seen.cache()
-        n_seen = seen.count()
-        t_crawl = time.time() - t0
-        out = scrape_targets(seen.select("source_id", "url"), pages_df, schemas, parse_partitions=cpus)
-        n_docs = out.docs.count()
-        wall = time.time() - t0
-        print(json.dumps({"cpus": cpus, "stage": stage, "wall": wall, "seen": n_seen,
-                          "docs": n_docs, "throughput": (n_seen + n_docs) / wall,
-                          "crawl_wall": round(t_crawl, 2), "parse_wall": round(wall - t_crawl, 2)}))
-    else:
-        spec = _heavy_spec(LOOP_PAGES, LOOP_HOSTS)
-        pages_df = spark.createDataFrame(build_pages(spec)).repartition(cpus).cache()
-        pages_df.count()
-        sources, schemas = _sources_and_schemas(spark, spec)
-        t0 = time.time()
-        res = crawl_sources(spark, sources, pages_df)
-        seen = res.seen.cache()
-        n_seen = seen.count()
-        out = scrape_targets(seen.select("source_id", "url"), pages_df, schemas, parse_partitions=cpus)
-        n_docs = out.docs.count()
-        wall = time.time() - t0
-        print(json.dumps({"cpus": cpus, "stage": stage, "wall": wall, "seen": n_seen,
-                          "docs": n_docs, "throughput": (n_seen + n_docs) / wall}))
-    spark.stop()
+            spec = _heavy_spec(LOOP_PAGES, LOOP_HOSTS)
+            world_path = f"/tmp/scaling_world_loop_{LOOP_PAGES}_{LOOP_HOSTS}.parquet"
+            if not os.path.exists(world_path):
+                build_pages_spark(spark, spec, partitions=128).write.mode("overwrite").parquet(world_path)
+            pages_df = spark.read.parquet(world_path)
+            sources, schemas = _sources_and_schemas(spark, spec)
+            t0 = time.time()
+            res = crawl_sources(
+                spark, sources, pages_df,
+                fetch="http", transport_factory=spec_transport_factory(spec),
+                fetch_kwargs={"sleep_fn": NO_SLEEP},
+            )
+            seen = res.seen.cache()
+            n_seen = seen.count()
+            t_crawl = time.time() - t0
+            out = scrape_targets(seen.select("source_id", "url"), pages_df, schemas, parse_partitions=cpus)
+            n_docs = out.docs.count()
+            wall = time.time() - t0
+            print(json.dumps({"cpus": cpus, "stage": stage, "wall": wall, "seen": n_seen,
+                              "docs": n_docs, "throughput": (n_seen + n_docs) / wall,
+                              "crawl_wall": round(t_crawl, 2), "parse_wall": round(wall - t_crawl, 2)}))
+        else:
+            spec = _heavy_spec(LOOP_PAGES, LOOP_HOSTS)
+            pages_df = spark.createDataFrame(build_pages(spec)).repartition(cpus).cache()
+            pages_df.count()
+            sources, schemas = _sources_and_schemas(spark, spec)
+            t0 = time.time()
+            res = crawl_sources(spark, sources, pages_df)
+            seen = res.seen.cache()
+            n_seen = seen.count()
+            out = scrape_targets(seen.select("source_id", "url"), pages_df, schemas, parse_partitions=cpus)
+            n_docs = out.docs.count()
+            wall = time.time() - t0
+            print(json.dumps({"cpus": cpus, "stage": stage, "wall": wall, "seen": n_seen,
+                              "docs": n_docs, "throughput": (n_seen + n_docs) / wall}))
+    finally:
+        spark.stop()
 
 
 def _burn(n: int) -> int:

@@ -96,28 +96,30 @@ def main():
 
     spark = get_spark(app_name="skew-bench", master=f"local[{args.cpus}]",
                       shuffle_partitions=args.cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        spark.sparkContext.setLogLevel("ERROR")
 
-    frontier = zipf_frontier(spark, args.rows).localCheckpoint(eager=True)
-    threshold = args.rows // (4 * args.cpus)
+        frontier = zipf_frontier(spark, args.rows).localCheckpoint(eager=True)
+        threshold = args.rows // (4 * args.cpus)
 
-    unsalted = frontier.repartition(args.cpus, F.col("host")).localCheckpoint(eager=True)
-    salted = salted_repartition(
-        frontier, "host", n_salts=args.cpus, threshold=threshold,
-        num_partitions=args.cpus, salt_col="url",
-    ).localCheckpoint(eager=True)
+        unsalted = frontier.repartition(args.cpus, F.col("host")).localCheckpoint(eager=True)
+        salted = salted_repartition(
+            frontier, "host", n_salts=args.cpus, threshold=threshold,
+            num_partitions=args.cpus, salt_col="url",
+        ).localCheckpoint(eager=True)
 
-    report = {"rows": args.rows, "cpus": args.cpus, "zipf_s": 1.2, "threshold": threshold}
-    for name, df in (("unsalted", unsalted), ("salted", salted)):
-        share = max_partition_share(df)
-        simulated_fetch_wall(df, cost_per_row_us=5)  # warm-up python workers
-        wall = simulated_fetch_wall(df)
-        report[name] = {"max_partition_share": round(share, 4), "fetch_wall_sec": round(wall, 2)}
-    report["speedup"] = round(
-        report["unsalted"]["fetch_wall_sec"] / report["salted"]["fetch_wall_sec"], 2
-    )
-    print(json.dumps(report))
-    spark.stop()
+        report = {"rows": args.rows, "cpus": args.cpus, "zipf_s": 1.2, "threshold": threshold}
+        for name, df in (("unsalted", unsalted), ("salted", salted)):
+            share = max_partition_share(df)
+            simulated_fetch_wall(df, cost_per_row_us=5)  # warm-up python workers
+            wall = simulated_fetch_wall(df)
+            report[name] = {"max_partition_share": round(share, 4), "fetch_wall_sec": round(wall, 2)}
+        report["speedup"] = round(
+            report["unsalted"]["fetch_wall_sec"] / report["salted"]["fetch_wall_sec"], 2
+        )
+        print(json.dumps(report))
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":
