@@ -695,10 +695,8 @@ def connected_components(
     Above the threshold: alternating star-contraction
     (:func:`connected_components_star`, Kiveris et al.) — O(log n)
     rounds regardless of graph diameter. ``method`` pins a specific
-    branch: ``'union_find'``, ``'star'``, or ``'label_prop'`` (min-label
-    propagation, O(diameter) rounds — kept as the equality baseline and
-    for known-shallow near-dup graphs where its per-round plan is
-    slightly cheaper). Every branch raises rather than return a
+    branch: ``'union_find'`` or ``'star'``; any other value raises
+    ``ValueError``. Every branch raises rather than return a
     partially-converged labeling."""
     # materialize the pair pipeline ONCE: the branch decision (count),
     # the union-find collect and the edge build all read these rows —
@@ -718,51 +716,7 @@ def connected_components(
         return _cc_union_find(pairs, a_col, b_col)
     if method == "star":
         return connected_components_star(pairs, a_col, b_col, max_iter)
-    if method != "label_prop":
-        raise ValueError(f"unknown connected-components method: {method!r}")
-    return _cc_label_propagation(pairs, a_col, b_col, max_iter)
-
-
-def _cc_label_propagation(
-    pairs: DataFrame, a_col: str, b_col: str, max_iter: int
-) -> DataFrame:
-    """Distributed min-label propagation: every node starts labeled with
-    itself; each round a node takes the min of its own and its
-    neighbors' labels; fixpoint in O(graph diameter) rounds (near-dup
-    graphs are unions of small dense clusters, diameter 2-4 — but an
-    adversarial long chain needs diameter rounds; use
-    :func:`connected_components_star` there). The per-round delta is
-    localCheckpointed so the iterative plan stays flat; each round is
-    one join + one min-agg, both shuffle-on-node-id."""
-    fwd = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("comp").alias("ncomp"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(F.col("comp"), F.coalesce(F.col("ncomp"), F.col("comp"))).alias("comp"),
-                (F.col("ncomp") < F.col("comp")).alias("_changed"),
-            )
-        ).localCheckpoint(eager=True)
-        changed = new_labels.filter(F.coalesce(F.col("_changed"), F.lit(False))).count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+    raise ValueError(f"unknown connected-components method: {method!r}")
 
 
 def connected_components_star(

@@ -293,7 +293,7 @@ class _Budget:
     cadence carry-over, the robots Disallow gate, the schedule log and
     min-depth re-admission."""
 
-    def __init__(self, robots, budget_s, obey_disallow, readmit, schedule_log):
+    def __init__(self, robots, budget_s, obey_disallow, schedule_log):
         if not budget_s > 0:
             raise ValueError(f"round_budget_s must be > 0, got {budget_s!r}")
         self.robots = robots
@@ -302,7 +302,6 @@ class _Budget:
         self.robots_rows = robots.count() if robots is not None else None
         self.budget_s = budget_s
         self.disallow = obey_disallow and robots is not None
-        self.readmit = readmit
         self.log = schedule_log
         # (host, t0) cadence carry-over: a host's last fetch near the
         # round boundary pushes its first slot next round, so per-host
@@ -432,7 +431,6 @@ def crawl_sources(
     metrics_store=None,
     run_id: str = "run",
     salt_hosts_threshold: int | None = None,
-    broadcast_wave_threshold: int = BROADCAST_WAVE_THRESHOLD,
     fetch: str = "join",
     transport_factory=None,
     fetch_kwargs: dict | None = None,
@@ -465,17 +463,10 @@ def crawl_sources(
     return _crawl(
         spark, sources, pages, None,
         make_root_filter=make_root_filter, max_rounds=max_waves,
-        salt_hosts_threshold=salt_hosts_threshold,
-        broadcast_wave_threshold=broadcast_wave_threshold, state_store=state_store,
+        salt_hosts_threshold=salt_hosts_threshold, state_store=state_store,
         resume=resume, metrics_store=metrics_store, run_id=run_id, fetch=fetch,
         transport_factory=transport_factory, fetch_kwargs=fetch_kwargs,
     )
-
-
-def crawl_source(
-    spark: SparkSession, source: SourceConfig, pages: DataFrame, **kw
-) -> CrawlResult:
-    return crawl_sources(spark, [source], pages, **kw)
 
 
 def crawl_sources_budgeted(
@@ -487,7 +478,6 @@ def crawl_sources_budgeted(
     make_root_filter: bool = True,
     max_rounds: int | None = None,
     salt_hosts_threshold: int | None = None,
-    broadcast_wave_threshold: int = BROADCAST_WAVE_THRESHOLD,
     obey_disallow: bool = False,
     state_store=None,
     resume: bool = False,
@@ -496,7 +486,6 @@ def crawl_sources_budgeted(
     fetch: str = "join",
     transport_factory=None,
     fetch_kwargs: dict | None = None,
-    readmit_min_depth: bool = True,
     schedule_log: list | None = None,
 ) -> CrawlResult:
     """Priority-frontier crawl with per-host politeness budgets.
@@ -510,7 +499,7 @@ def crawl_sources_budgeted(
     nothing reproduces :func:`crawl_sources` row for row; otherwise visit
     ORDER follows the schedule, and the seen SET still equals BFS.
 
-    ``readmit_min_depth`` (default on) keeps that set equal when
+    Min-depth re-admission keeps that set equal when
     ``include_external=True`` meets mixed per-host delays: a URL first
     found via a deeper parent on a fast host is re-admitted when a
     shallower parent rediscovers it (test_budgeted_readmission_multi_host).
@@ -524,12 +513,11 @@ def crawl_sources_budgeted(
     schedule every round. The other options are those of
     :func:`crawl_sources`, with rounds in place of waves.
     """
-    budget = _Budget(robots, round_budget_s, obey_disallow, readmit_min_depth, schedule_log)
+    budget = _Budget(robots, round_budget_s, obey_disallow, schedule_log)
     return _crawl(
         spark, sources, pages, budget,
         make_root_filter=make_root_filter, max_rounds=max_rounds,
-        salt_hosts_threshold=salt_hosts_threshold,
-        broadcast_wave_threshold=broadcast_wave_threshold, state_store=state_store,
+        salt_hosts_threshold=salt_hosts_threshold, state_store=state_store,
         resume=resume, metrics_store=metrics_store, run_id=run_id, fetch=fetch,
         transport_factory=transport_factory, fetch_kwargs=fetch_kwargs,
     )
@@ -537,8 +525,8 @@ def crawl_sources_budgeted(
 
 def _crawl(spark: SparkSession, sources: list[SourceConfig], pages: DataFrame,
            budget: _Budget | None, *, make_root_filter, max_rounds, salt_hosts_threshold,
-           broadcast_wave_threshold, state_store, resume, metrics_store, run_id, fetch,
-           transport_factory, fetch_kwargs) -> CrawlResult:
+           state_store, resume, metrics_store, run_id, fetch, transport_factory,
+           fetch_kwargs) -> CrawlResult:
     """The round loop of both entry points: pending → fetch set (all of
     it, or the budget's share) → fetch → links → scope filter → MC
     previews → depth gate → seen anti-join → first-occurrence dedup →
@@ -661,7 +649,7 @@ def _crawl(spark: SparkSession, sources: list[SourceConfig], pages: DataFrame,
             # set so page html never shuffles; a URL without a page row
             # fails fetch_ok and stays in seen (the dead-fetch path)
             links = (
-                _fetch_join(fetch_set.drop("host"), pages_slim, n_now, broadcast_wave_threshold)
+                _fetch_join(fetch_set.drop("host"), pages_slim, n_now, BROADCAST_WAVE_THRESHOLD)
                 .filter(fetch_ok_col())
                 .select("source_id", F.col("url").alias("page_url"),
                         F.col("seq").alias("parent_seq"), "depth", "html", "is_mc")
@@ -747,7 +735,7 @@ def _crawl(spark: SparkSession, sources: list[SourceConfig], pages: DataFrame,
         ).unionByName(previews)
 
         readmit, n_readmit = None, 0
-        if budget is not None and budget.readmit:
+        if budget is not None:
             readmit, n_readmit = budget.readmissions(queue_cand, seen, deepest)
 
         # the round's single materialization. The checkpoint is lazy, yet

@@ -5,6 +5,7 @@ per-host per-round fetch counts respect floor(budget / crawl_delay)."""
 import pytest
 from pyspark.sql import functions as F
 
+from course_scraper_spark.operators import frontier
 from course_scraper_spark.operators.frontier import crawl_sources, crawl_sources_budgeted
 
 
@@ -126,13 +127,12 @@ def test_budgeted_readmission_multi_host(spark):
     assert "https://fast.edu/y.html" in bfs.seen_urls("LOCAL_mixed")
 
 
-def test_budgeted_divergence_without_readmission(spark):
+def test_budgeted_divergence_without_readmission(spark, monkeypatch):
     """Negative control: with re-admission off, the fixture actually
     loses the horizon subtree — proving the test exercises the gap."""
     src, pages, robots = _mixed_delay_world(spark)
-    off = crawl_sources_budgeted(
-        spark, [src], pages, robots=robots, round_budget_s=5.0, readmit_min_depth=False
-    )
+    monkeypatch.setattr(frontier._Budget, "readmissions", lambda self, *a: (None, 0))
+    off = crawl_sources_budgeted(spark, [src], pages, robots=robots, round_budget_s=5.0)
     urls = off.seen_urls("LOCAL_mixed")
     assert "https://fast.edu/x.html" in urls      # discovered (deep) ...
     assert "https://fast.edu/y.html" not in urls  # ... but never expanded
@@ -218,7 +218,6 @@ def test_compose_all_features_equality(spark, tmp_path):
         fetch_kwargs={"sleep_fn": NO_SLEEP},
         metrics_store=mstore,
         run_id="compose",
-        readmit_min_depth=True,
     )
     want = sorted((r.source_id, r.url) for r in oracle.seen.select("source_id", "url").collect())
     got = sorted((r.source_id, r.url) for r in composed.seen.select("source_id", "url").collect())

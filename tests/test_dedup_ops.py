@@ -229,17 +229,19 @@ def test_simhash64_bucket_cardinality_not_capped(spark):
 
 def test_connected_components_transitive(spark):
     """a~b, b~c (a~c never a pair) must land in ONE cluster — pairs alone
-    are not a dedup decision. The driver union-find branch and both
-    distributed branches (star-contraction, label propagation) must
-    agree."""
+    are not a dedup decision. The driver union-find branch and the
+    distributed star-contraction branch must agree; an unknown method
+    raises."""
     pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 9)], ["doc_a", "doc_b"])
-    for method in ("union_find", "star", "label_prop"):
+    for method in ("union_find", "star"):
         comp = {
             r.node: r.comp
             for r in D.connected_components(pairs, method=method).collect()
         }
         assert comp[1] == comp[2] == comp[3] == 1, method
         assert comp[7] == comp[9] == 7, method
+    with pytest.raises(ValueError):
+        D.connected_components(pairs, method="label_prop")
 
 
 def test_connected_components_long_chain_and_convergence_guard(spark):
@@ -257,18 +259,14 @@ def test_connected_components_long_chain_and_convergence_guard(spark):
 
 def test_star_contraction_beats_diameter(spark):
     """The adversarial case the 100 TB design must survive: a component
-    whose diameter (200) far exceeds any reasonable round budget.
-    Label propagation needs O(diameter) rounds and must raise at
-    max_iter=20; star contraction closes in O(log n) rounds under the
-    same budget, and its labeling equals the union-find ground truth."""
+    whose diameter (200) far exceeds any reasonable round budget. Star
+    contraction closes in O(log n) rounds under a 20-round budget, and
+    its labeling equals the union-find ground truth."""
     n = 200
     # interleave a second component + singleton-ish pair to catch
     # cross-component label bleed
     edges = [(i, i + 1) for i in range(n)] + [(1000, 1001), (1001, 1002)]
     chain = spark.createDataFrame(edges, ["doc_a", "doc_b"]).repartition(8)
-
-    with pytest.raises(RuntimeError, match="converge"):
-        D.connected_components(chain, max_iter=20, method="label_prop")
 
     star = {
         r.node: r.comp

@@ -6,6 +6,7 @@ bit-identical with salting + shuffle-join on."""
 import pytest
 from pyspark.sql import functions as F
 
+from course_scraper_spark.operators import frontier
 from course_scraper_spark.operators.frontier import _fetch_join, crawl_sources
 from course_scraper_spark.operators.salting import hot_keys, salted_repartition
 
@@ -77,13 +78,12 @@ def test_fetch_join_plan_shapes(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_salted_shuffle_crawl_identical(spark, sources, pages):
+def test_salted_shuffle_crawl_identical(spark, sources, pages, monkeypatch):
     """Salting + shuffle-path fetch join are physical-only: seen set and
     visit order match the plain crawl bit-for-bit."""
     plain = crawl_sources(spark, sources, pages)
-    tweaked = crawl_sources(
-        spark, sources, pages, salt_hosts_threshold=1, broadcast_wave_threshold=0
-    )
+    monkeypatch.setattr(frontier, "BROADCAST_WAVE_THRESHOLD", 0)
+    tweaked = crawl_sources(spark, sources, pages, salt_hosts_threshold=1)
     for s in sources:
         assert tweaked.seen_urls(s.source_id) == plain.seen_urls(s.source_id)
         assert tweaked.visit_order(s.source_id) == plain.visit_order(s.source_id)
